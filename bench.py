@@ -429,25 +429,25 @@ def main() -> None:
         with open(out_path, "w", encoding="utf-8") as fh:
             json.dump({"sf": sf, "rows": rows}, fh, indent=1, sort_keys=True)
             fh.write("\n")
-    # COMPACT contract line (round-14 verdict #1): the full per-row table
-    # used to ride on this line and blew past the driver's stdout tail
-    # window — BENCH_r13.json's tail started mid-JSON, so PERF_r14
-    # compared ZERO queries round-over-round. The verbose
-    # {spark_s, duck_s, ratio, drift flags} rows live ONLY in the
-    # committed BENCH_LOCAL_r*.json now; the contract line keeps exactly
-    # the driver-contract fields ({metric, value, unit, queries, sf} plus
-    # the small oracle_total scalar) and is the LAST stdout line.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": round(sum(times.values()), 3),
-                "unit": "sec",
-                "queries": times,
-                "oracle_total": round(sum(duck.values()), 3) if duck else None,
-                "sf": sf,
-            }
-        )
+    print(contract_line(times, duck, sf))
+
+
+def contract_line(times: dict[str, float], duck: dict[str, float], sf: float) -> str:
+    """The LAST stdout line of a run: exactly the contract fields
+    ({metric, value, unit, queries, sf} plus the small oracle_total
+    scalar). It is kept COMPACT so it fits a reader's stdout tail window;
+    the verbose {spark_s, duck_s, ratio, drift flags} rows go only to the
+    BENCH_LOCAL_r*.json table (a line that embedded them once overflowed
+    that window and round-over-round comparisons saw zero queries)."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total_wall",
+            "value": round(sum(times.values()), 3),
+            "unit": "sec",
+            "queries": times,
+            "oracle_total": round(sum(duck.values()), 3) if duck else None,
+            "sf": sf,
+        }
     )
 
 

@@ -6,18 +6,25 @@ range-partitioned relation behind ``sort.global_rank``) persist it through
 (the driver does) can release the previous query's caches instead of
 accumulating cached blocks until LRU eviction competes with shuffle memory.
 
+Streaming memory sinks register a temp view per run; ``track_view`` lets
+the same release drop them, so a long-lived session does not collect one
+``stream_sink_N`` view per streaming query.
+
 ``registry.register``'s dispatch wrapper calls ``release_caches()`` before
 EVERY query build: by then the previous query's result has been collected,
 so its caches are dead weight. Bounded invariant: at most one query's
-caches are live at any time. (Unpersist is always safe — a caller that
-executes an older DataFrame afterwards just recomputes.)
+caches and views are live at any time. (Unpersist is always safe — a
+caller that executes an older DataFrame afterwards just recomputes; a
+DataFrame read from a view before the drop is already resolved and stays
+readable.)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _LIVE_CACHES: list[DataFrame] = []
+_LIVE_VIEWS: list[tuple[SparkSession, str]] = []
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -34,6 +41,14 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
+def track_view(spark: SparkSession, name: str) -> None:
+    """Register a session temp view for release."""
+    _LIVE_VIEWS.append((spark, name))
+
+
 def release_caches() -> None:
     while _LIVE_CACHES:
         _LIVE_CACHES.pop().unpersist()
+    while _LIVE_VIEWS:
+        spark, name = _LIVE_VIEWS.pop()
+        spark.catalog.dropTempView(name)

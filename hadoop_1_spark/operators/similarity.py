@@ -1875,9 +1875,11 @@ def _pq_adc_scan(
     adist = F.col("_m0")[F.col("c0")]
     for i in range(1, m):
         adist = adist + F.col(f"_m{i}")[F.col(f"c{i}")]
+    # a code with no codebook entry (stale codes/codebook pair) gives a
+    # NULL distance, which would sort FIRST and take the shortlist: drop it
     cand = cand.select(
         "query_id", F.col(id_col).alias("neighbor_id"), adist.alias("_adist")
-    )
+    ).where(F.col("_adist").isNotNull())
     w = Window.partitionBy("query_id").orderBy(
         F.asc("_adist"), F.asc("neighbor_id")
     )

@@ -11,13 +11,28 @@ Scale notes (100 TB design intent):
 - shuffle.partitions defaults to the local core count here; on a real
   cluster AQE re-plans from ``spark.sql.adaptive.coalescePartitions``.
 - Arrow enabled so Pandas-UDF paths are vectorized.
+
+Schema cache: inferring a parquet schema is a Spark job (footer read and
+file listing), and every query loads its tables afresh.
+``parquet_schema`` keeps each table's inferred schema per session, keyed by
+path and the file's ``(st_ino, st_mtime_ns, st_size)`` stamp; on a hit,
+``load_table`` reads with ``spark.read.schema(cached).parquet(path)``,
+which runs no job. A table rewritten at the same path gets a new stamp
+(new inode for write-then-rename and Spark overwrites, new mtime/size for
+in-place rewrites; a directory's stamp moves when part files are added,
+removed or renamed into it) and is inferred again. Only the schema is
+cached, not the DataFrame: each load is a fresh relation with fresh
+attribute ids, so two loads of one table still self-join. Paths that are
+not local files (``os.stat`` fails) are never cached.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -38,6 +53,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # normalize_timestamps folds exactly these when a nanos-vintage read
 # surfaces them as epoch-nanos longs).
 TEMPORAL_COLUMNS = frozenset({"ts", "o_orderdate", "l_shipdate"})
+
+# session -> {path: (file stamp, inferred schema)}; see module docstring
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def get_spark(app_name: str = "hadoop_1_spark", cpus: int | None = None) -> SparkSession:
@@ -87,7 +105,7 @@ def ts_nanos(col):
     return F.timestamp_micros(micros)
 
 
-def normalize_timestamps(df: DataFrame) -> DataFrame:
+def normalize_timestamps(df: DataFrame, schema: StructType) -> DataFrame:
     """Canonicalize temporal columns across driver-testdata vintages.
 
     The driver has shipped the events/orders/lineitem temporal columns as
@@ -97,12 +115,15 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     ONE type, so every vintage is folded to session-tz TIMESTAMP at micro
     precision; the session timezone is pinned to UTC (get_spark/load_table)
     so the NTZ->TZ cast is the identity on the underlying micros and
-    unix_micros() agrees bit-for-bit with DuckDB's tz-free epoch_us()."""
+    unix_micros() agrees bit-for-bit with DuckDB's tz-free epoch_us().
+
+    ``schema`` is ``df``'s schema, which the callers already hold
+    (``parquet_schema``), so reading it costs no ``df.schema`` round-trip."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
     out = df
-    for field in df.schema.fields:
+    for field in schema.fields:
         if isinstance(field.dataType, TimestampNTZType):
             out = out.withColumn(field.name, F.col(field.name).cast("timestamp"))
         elif field.name in TEMPORAL_COLUMNS and isinstance(field.dataType, LongType):
@@ -113,18 +134,41 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     return out
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one star-schema parquet table (TESTDATA.md contract), temporal
-    columns normalized to UTC TIMESTAMP (see normalize_timestamps).
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, cached per session
+    by path and file stamp (module docstring, "Schema cache").
 
-    Sets nanosAsLong + UTC session timezone on the live session too — the
-    driver harness calls our queries with its own SparkSession, which won't
-    have the builder config."""
+    Sets nanosAsLong + UTC session timezone on the live session first — a
+    caller may pass its own SparkSession (``__spark_entry__``'s harness
+    does), which won't have get_spark's config, and the inferred schema
+    depends on nanosAsLong."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return normalize_timestamps(
-        spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    )
+    try:
+        st = os.stat(path)
+    except OSError:
+        # not a local file: let Spark resolve the path (and raise for it)
+        return spark.read.parquet(path).schema
+    # stamped BEFORE inferring: a rewrite racing the inference (or another
+    # thread's lookup) can only cause a miss, never a stale hit
+    stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+    cache = _SCHEMAS.setdefault(spark, {})
+    hit = cache.get(path)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    cache[path] = (stamp, schema)
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one star-schema parquet table (TESTDATA.md contract), temporal
+    columns normalized to UTC TIMESTAMP (see normalize_timestamps). The
+    schema comes from ``parquet_schema``, so a warm load runs no Spark
+    job."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = parquet_schema(spark, path)
+    return normalize_timestamps(spark.read.schema(schema).parquet(path), schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -38,19 +38,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet, `ts` normalized to a
     session-tz TIMESTAMP for event-time semantics.
 
-    File streams need an explicit schema; it is probed from the parquet
-    footer (driver-side metadata read, no scan) so the stream matches
-    whichever temporal vintage the driver generated — TIMESTAMP(NANOS)
-    read as epoch-nanos long under nanosAsLong, or TIMESTAMP_MICROS NTZ
-    (see session.normalize_timestamps)."""
+    File streams need an explicit schema; it is the batch read's inferred
+    schema (session.parquet_schema, cached per session like load_table's)
+    so the stream matches whichever temporal vintage the table carries —
+    TIMESTAMP(NANOS) read as epoch-nanos long under nanosAsLong, or
+    TIMESTAMP_MICROS NTZ (see session.normalize_timestamps)."""
     import os
 
-    from hadoop_1_spark.session import normalize_timestamps
+    from hadoop_1_spark.session import normalize_timestamps, parquet_schema
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     if os.path.isdir(path):
         # directory-shaped table (Spark-written): stream the table dir
         # itself — a pathGlobFilter on the PARENT would match the
@@ -69,7 +67,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    return normalize_timestamps(raw)
+    return normalize_timestamps(raw, schema)
 
 
 def run_to_table(
@@ -86,8 +84,15 @@ def run_to_table(
     scale (stream_outer_join 10.2 -> 3.3 s, tumbling counts 1.6 -> 1.1 s
     on local[32] at sf0.1). Production sizes this to state VOLUME
     instead — the value is a per-query knob precisely because state
-    partition count is fixed by the checkpoint at first start."""
+    partition count is fixed by the checkpoint at first start.
+
+    The sink's temp view is tracked (caching.track_view), so the next
+    registered query's build drops it; the returned DataFrame is already
+    resolved and stays readable."""
+    from hadoop_1_spark.operators import caching
+
     name = f"stream_sink_{next(_sink_ids)}"
+    caching.track_view(spark, name)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(min(int(old), state_partitions))

@@ -22,7 +22,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("hadoop_1_spark_tests", cpus=8)
+    # cores from $SPARK_GRAFT_CPUS (or all local cores), as get_spark does
+    spark = get_spark("hadoop_1_spark_tests")
     yield spark
 
 

@@ -665,6 +665,33 @@ def test_pq_scan_matches_inline_training(spark, tmp_path):
     assert got == want
 
 
+def test_pq_scan_drops_stale_codes(spark, tmp_path):
+    """A stale park (codes that name codebook entries the codebook no
+    longer has) gives those rows a NULL ADC distance. They must drop out,
+    not sort first into the rerank shortlist and crowd out valid rows."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = emb.where("vec_id < 5")
+    path = str(tmp_path / "pq_stale")
+    similarity.pq_park(emb, path, m=4, subdim=16, kcb=16, iters=1)
+    books = spark.read.parquet(f"{path}/codebooks").collect()
+    cids0 = sorted(r["cid"] for r in books if r["sub"] == 0)
+    kept0 = set(cids0[: len(cids0) // 2])
+    spark.createDataFrame(
+        [tuple(r) for r in books if r["sub"] != 0 or r["cid"] in kept0],
+        "sub int, cid int, cvec array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    codes = spark.read.parquet(f"{path}/codes")
+    stale = {r["vec_id"] for r in codes.collect() if r["c0"] not in kept0}
+    assert len(stale) > 20  # enough NULL rows to fill a rerank-20 shortlist
+    rows = similarity.pq_adc_topk_scan(emb, q, path, k=5, rerank=20).collect()
+    per = {}
+    for r in rows:
+        per.setdefault(r["query_id"], []).append(r["neighbor_id"])
+    assert sorted(per) == [0, 1, 2, 3, 4]
+    assert all(len(v) == 5 for v in per.values())
+    assert not stale & {r["neighbor_id"] for r in rows}
+
+
 def test_sim_pq_topk_scan_matches_oracle(spark, duck):
     assert_query_matches_oracle(spark, duck, "sim_pq_topk_scan")
 

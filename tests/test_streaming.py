@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import assert_query_matches_oracle
+from tests.conftest import SF_DIR, assert_query_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -21,6 +21,19 @@ from tests.conftest import assert_query_matches_oracle
 )
 def test_streaming_queries_match_oracle(spark, duck, name):
     assert_query_matches_oracle(spark, duck, name)
+
+
+def test_memory_sinks_released_between_queries(spark):
+    """Each run_to_table registers a stream_sink_N view; the next
+    registered query's dispatch drops the previous one, so repeated
+    streaming queries do not pile up views. The released result stays
+    readable."""
+    from hadoop_1_spark import registry
+
+    runs = [registry.QUERIES["stream_tumbling_counts"](spark, SF_DIR) for _ in range(3)]
+    sinks = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")]
+    assert len(sinks) <= 1, sinks
+    assert sorted(map(tuple, runs[0].collect())) == sorted(map(tuple, runs[2].collect()))
 
 
 def test_sliding_doubles_row_mass(spark):
