@@ -6,6 +6,12 @@ range-partitioned relation behind ``sort.global_rank``) persist it through
 (the driver does) can release the previous query's caches instead of
 accumulating cached blocks until LRU eviction competes with shuffle memory.
 
+Iterative operators truncate lineage with ``local_checkpoint``, which
+registers the checkpoint's RDD: ``DataFrame.unpersist()`` does not free a
+local checkpoint's blocks (they belong to the RDD under the plan's
+``LogicalRDD``, not to the cache manager), so the release unpersists that
+RDD itself.
+
 Streaming memory sinks register a temp view per run; ``track_view`` lets
 the same release drop them, so a long-lived session does not collect one
 ``stream_sink_N`` view per streaming query.
@@ -13,10 +19,12 @@ the same release drop them, so a long-lived session does not collect one
 ``registry.register``'s dispatch wrapper calls ``release_caches()`` before
 EVERY query build: by then the previous query's result has been collected,
 so its caches are dead weight. Bounded invariant: at most one query's
-caches and views are live at any time. (Unpersist is always safe — a
-caller that executes an older DataFrame afterwards just recomputes; a
-DataFrame read from a view before the drop is already resolved and stays
-readable.)
+caches and views are live at any time. (Unpersisting a cache is always
+safe — a caller that executes an older DataFrame afterwards just
+recomputes; a DataFrame read from a view before the drop is already
+resolved and stays readable. A released local checkpoint is not: its
+lineage is cut, so a DataFrame built on it fails if executed after the
+next query's release.)
 """
 
 from __future__ import annotations
@@ -25,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 _LIVE_CACHES: list[DataFrame] = []
 _LIVE_VIEWS: list[tuple[SparkSession, str]] = []
+_LIVE_CHECKPOINTS: list = []  # JVM RDDs behind local checkpoints
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -41,6 +50,14 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=False)``, its blocks registered for
+    release (module docstring)."""
+    out = df.localCheckpoint(eager=False)
+    _LIVE_CHECKPOINTS.append(out._jdf.queryExecution().analyzed().rdd())
+    return out
+
+
 def track_view(spark: SparkSession, name: str) -> None:
     """Register a session temp view for release."""
     _LIVE_VIEWS.append((spark, name))
@@ -49,6 +66,8 @@ def track_view(spark: SparkSession, name: str) -> None:
 def release_caches() -> None:
     while _LIVE_CACHES:
         _LIVE_CACHES.pop().unpersist()
+    while _LIVE_CHECKPOINTS:
+        _LIVE_CHECKPOINTS.pop().unpersist(False)
     while _LIVE_VIEWS:
         spark, name = _LIVE_VIEWS.pop()
         spark.catalog.dropTempView(name)

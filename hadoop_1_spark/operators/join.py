@@ -278,7 +278,14 @@ def bloom_prefilter_semi_join(
     exchange + aggregate inside the probe plan (guide §2.4: a distinct
     on data that is already unique is an accidental shuffle). A small
     side with heavily duplicated keys should pre-distinct itself before
-    calling (the broadcast hash relation stores every build row)."""
+    calling (the broadcast hash relation stores every build row).
+
+    Classic (py4j) sessions only: the probe reads the filter words from a
+    temp view that is dropped as soon as the plan is built, which relies
+    on classic DataFrames analyzing eagerly (the analyzed plan inlines the
+    view's LocalRelation). A Spark Connect DataFrame is an unresolved plan
+    that the server analyzes at execution, after the view is gone, so
+    this function does not work under Spark Connect."""
     if m_words is None:
         m_words, filt = _bloom_build_auto(small, key, h)
     else:

@@ -1374,7 +1374,7 @@ def mmr_topk(
     (lsh_ann_topk's candidate economics); each step joins the remaining
     candidates against the i-selected set — k * candidate-sized work,
     never corpus-sized. Queries are broadcast throughout."""
-    from hadoop_1_spark.operators.caching import persist_tracked
+    from hadoop_1_spark.operators.caching import local_checkpoint, persist_tracked
 
     signs = hyperplane_signs(nbits, seed=seed)
     q = F.broadcast(
@@ -1417,8 +1417,9 @@ def mmr_topk(
     # like connected_components' rounds: each step's picks materialize
     # once inside the same (single) job, later steps read the RDD. Rows
     # are identical — checkpointing only cuts lineage, and the greedy
-    # recursion itself is untouched.
-    selected = pick.localCheckpoint(eager=False)
+    # recursion itself is untouched. The checkpoints are registered with
+    # caching, so the next query's release_caches() frees their blocks.
+    selected = local_checkpoint(pick)
     for step in range(2, k + 1):
         # Per-step candidate x SELECTED cosines (selected <= step-1 rows
         # per query), never the n_c^2 all-candidate sims relation the
@@ -1467,7 +1468,7 @@ def mmr_topk(
         )
         selected = selected.unionByName(nxt)
         if step < k:
-            selected = selected.localCheckpoint(eager=False)
+            selected = local_checkpoint(selected)
     return selected.select(
         "query_id", "neighbor_id", F.round("mmr_score", 9).alias("mmr_score"),
         F.col("rank").cast("int").alias("rank"),

@@ -125,9 +125,16 @@ GROUP BY c_mktsegment, o_orderpriority
 )
 def join_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained n-way equi-join (J2/J6 shape) customer ⋈ orders ⋈ lineitem +
-    grouped revenue. At 100 TB both joins shuffle on their keys with AQE
-    skew-splitting; co-location comes free when the tables are bucketed by
-    custkey/orderkey (the CompositeInputFormat no-shuffle analog)."""
+    grouped revenue. Plan (session.py, "Broadcast policy"): customer is a
+    small dimension and is broadcast into the orders scan; orders ⋈
+    lineitem is planned as a shuffle join on orderkey. At sf0.1, AQE
+    measures the shuffled customer-orders side (150k rows) under its
+    broadcast threshold and turns the join into a broadcast join; lineitem
+    is still read by reducer partition, so the probe and the partial
+    aggregate run on every core. At 100 TB both joins shuffle on their
+    keys with AQE skew-splitting; co-location comes free when the tables
+    are bucketed by custkey/orderkey (the CompositeInputFormat no-shuffle
+    analog)."""
     c = _load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     o = _load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderpriority")
     li = _load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
@@ -454,12 +461,16 @@ def tpch_q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Revenue ships as a DECIMAL(38,8) STRING (the agg_sums_by_flag
     1-ulp rule); o_orderdate as exact epoch micros.
 
-    Shape at 100 TB: both filters push to the parquet scans; the
-    c->o join keys on custkey and o->l on orderkey — two shuffles
-    Catalyst orders by size, AQE converting the (segment-filtered)
-    customer side to broadcast when it fits. Top-10 is a TakeOrdered
-    over the grouped relation, never a global sort; the rank window
-    runs over the 10 survivors."""
+    Shape: both filters push to the parquet scans. The segment-filtered
+    customers are a small dimension, broadcast into the orders scan
+    (session.py, "Broadcast policy"), so c->o needs no shuffle; o->l is
+    planned as a shuffle join on orderkey. When a shuffled side measures
+    under AQE's broadcast threshold (at sf0.1 the filtered orders or the
+    date-filtered lineitem, whichever stage finishes first) AQE turns
+    it into a broadcast join and reads the other side by reducer
+    partition. At 100 TB both o->l sides stay shuffled. Top-10 is a
+    TakeOrdered over the grouped relation, never a global sort; the rank
+    window runs over the 10 survivors."""
     from pyspark.sql.window import Window
 
     cu = _load(spark, sf_dir, "customer").where(F.col("c_mktsegment") == Q3_SEGMENT)
@@ -590,11 +601,14 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB: the big-order candidate set is ONE map-side-
     combined aggregation over lineitem followed by a semi-join
     (left_semi, so candidate rows never widen the build side); the
-    detail re-aggregation reuses the same orderkey partitioning.
+    detail re-aggregation reuses the same orderkey partitioning:
+    lineitem is repartitioned by l_orderkey once, and the HAVING
+    aggregate and the detail join both read that one exchange (the
+    second read is a ReusedExchange).
     No LIMIT — the threshold bounds the result."""
     cu = _load(spark, sf_dir, "customer")
     od = _load(spark, sf_dir, "orders")
-    li = _load(spark, sf_dir, "lineitem")
+    li = _load(spark, sf_dir, "lineitem").repartition("l_orderkey")
     dq = F.col("l_quantity").cast("decimal(18,4)")
     big = (
         li.groupBy("l_orderkey")

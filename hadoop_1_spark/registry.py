@@ -49,8 +49,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     the next query is being built the previous result has been collected,
     so its caches are dead weight. Bounded invariant for a long-lived
     session running the whole catalog: at most one query's caches are
-    live at any time. (Unpersist is always safe — a caller that executes
-    an older DataFrame afterwards just recomputes.)
+    live at any time. (Unpersisting a cache is always safe — a caller that
+    executes an older DataFrame afterwards just recomputes; a released
+    local checkpoint is not, see operators.caching.)
     """
 
     def wrap(fn: QueryFn) -> QueryFn:

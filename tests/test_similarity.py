@@ -453,6 +453,30 @@ def test_mmr_prefers_diversity(spark):
     assert picked == [1, 3]
 
 
+def test_mmr_checkpoints_released_by_next_query(spark):
+    """mmr_topk's per-step local checkpoints are registered with caching,
+    so the next registered query's release_caches() frees their blocks
+    (DataFrame.unpersist() alone does not free a local checkpoint)."""
+    from hadoop_1_spark import registry
+    from hadoop_1_spark.operators import caching
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def rdds_with_blocks():
+        return {i.id() for i in jsc.getRDDStorageInfo()}
+
+    caching.release_caches()
+    before = rdds_with_blocks()
+    # held, so a JVM GC cannot free the checkpoints (ContextCleaner) in
+    # the release's place
+    out = registry.QUERIES["sim_mmr_topk"](spark, SF_DIR)
+    out.collect()
+    mmr = rdds_with_blocks() - before
+    assert mmr, "sim_mmr_topk left no blocks to release"
+    registry.QUERIES["grep"](spark, SF_DIR).collect()
+    assert not rdds_with_blocks() & mmr
+
+
 def test_embedding_dim_stats_matches_oracle(spark, duck):
     assert_query_matches_oracle(spark, duck, "embedding_dim_stats")
 
