@@ -25,266 +25,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry.QUERIES["grep"](spark, SMOKE_SF_DIR)
 
 
-def _correctness_history() -> tuple[dict[str, int], dict[str, bool]]:
-    """(query -> latest round containing it, query -> latest check failed).
-
-    The driver verifies a bounded prefix of ``queries()`` per round, so we
-    rotate: queries never checked (or checked longest ago) sort first,
-    guaranteeing every registered query cycles through the verification
-    window across rounds. A deliberately oracle-less query's rows-only
-    check (err == "no_oracle") does not count as a failure.
-    """
-    import glob
-    import json
-    import re
-
-    base = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-    failed: dict[str, bool] = {}
-    for path in sorted(glob.glob(os.path.join(base, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path, encoding="utf-8") as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if rnd < last.get(name, 0):
-                continue
-            last[name] = rnd
-            bad = False
-            if isinstance(row, dict):
-                err = row.get("err")
-                bad = (
-                    row.get("rows_match") is False
-                    or row.get("hash_match") is False
-                    or row.get("schema_match") is False
-                    or (err is not None and err != "no_oracle")
-                )
-            failed[name] = bad
-    return last, failed
-
-
-def _module_files(modname: str, stop: frozenset[str] = frozenset()) -> list[str]:
-    """Transitive repo-relative source files behind a query's module: the
-    module itself plus every ``hadoop_1_spark.*`` module its source (or
-    its imports' sources, recursively) mentions — textual scan, so imports
-    local to function bodies are included too. ``from hadoop_1_spark.pkg
-    import mod_a, mod_b as b`` resolves the imported names as candidate
-    submodules too (round-7: the prefix-only scan left e.g. operators/
-    graph.py out of every closure, so edits there never dirtied their
-    queries). Files in ``stop`` are included but their imports are not
-    followed — query closures stop at the core boundary, otherwise
-    registry.py's query-wiring imports would pull every q_* module into
-    every closure."""
-    import re
-
-    base = os.path.dirname(os.path.abspath(__file__))
-
-    def to_path(name: str) -> str | None:
-        rel = name.replace(".", "/")
-        for cand in (rel + ".py", rel + "/__init__.py"):
-            if os.path.exists(os.path.join(base, cand)):
-                return cand
-        return None
-
-    seen: set[str] = set()
-    stack = [modname]
-    files: set[str] = set()
-    while stack:
-        name = stack.pop()
-        if name in seen:
-            continue
-        seen.add(name)
-        path = to_path(name)
-        if path is None:
-            continue
-        files.add(path)
-        if path in stop:
-            continue
-        with open(os.path.join(base, path), encoding="utf-8") as fh:
-            src = fh.read()
-        stack.extend(re.findall(r"(?:from|import)\s+(hadoop_1_spark(?:\.\w+)*)", src))
-        for pkg, names in re.findall(
-            r"from\s+(hadoop_1_spark(?:\.\w+)*)\s+import\s+(\([^)]*\)|[^\n]*)", src
-        ):
-            for ident in re.findall(r"[A-Za-z_]\w*", names):
-                if ident == "as":
-                    continue
-                stack.append(f"{pkg}.{ident}")
-    return sorted(files)
-
-
-def _core_files() -> list[str]:
-    """The engine-core seam shared by EVERY query: registry.py (the
-    dispatch every entry point goes through), session.py (the load seam),
-    and the package __init__s. Hashed SEPARATELY from the per-query
-    closures so an edit here marks queries "core-dirty" — their own drain
-    rank in the rotation — instead of erasing all verification state at
-    once (round-4 verdict #1). An explicit list rather than an import walk:
-    a walk from registry.py would leak its per-query wiring imports
-    (``from hadoop_1_spark.queries import q_*``) into core now that
-    from-imports resolve submodules (round-7)."""
-    import glob
-
-    base = os.path.dirname(os.path.abspath(__file__))
-    # caching.py is core because registry's dispatch wrapper calls
-    # caching.release_caches around EVERY query (round-11 shrink: the
-    # cache registry used to be re-exported through dedup.py, which made
-    # ALL of dedup.py core and poisoned the whole ledger on any dedup
-    # edit; now only the 40-line caching module carries that weight).
-    files = [
-        "hadoop_1_spark/registry.py",
-        "hadoop_1_spark/session.py",
-        "hadoop_1_spark/operators/caching.py",
-    ]
-    files += [
-        os.path.relpath(p, base)
-        for p in glob.glob(os.path.join(base, "hadoop_1_spark/**/__init__.py"), recursive=True)
-    ]
-    return sorted(f for f in files if os.path.exists(os.path.join(base, f)))
-
-
-def _digest_files(files, read=None) -> str:
-    import hashlib
-
-    base = os.path.dirname(os.path.abspath(__file__))
-    if read is None:
-        def read(rel: str) -> bytes:
-            with open(os.path.join(base, rel), "rb") as fh:
-                return fh.read()
-
-    h = hashlib.md5()
-    for rel in files:
-        h.update(rel.encode())
-        h.update(read(rel))
-    return h.hexdigest()
-
-
-def core_digest(read=None) -> str:
-    """md5 over the engine-core files (see _core_files)."""
-    return _digest_files(_core_files(), read)
-
-
-def query_digest(name: str, read=None) -> str:
-    """md5 over the source-file closure of a registered query's builder,
-    EXCLUDING the engine-core files (those are tracked by core_digest so a
-    core edit can't dirty queries wholesale). ``read(relpath) -> bytes``
-    defaults to the working tree (the record script passes a ``git show
-    HEAD:...`` reader to pin the verified snapshot)."""
-    import inspect
-
-    core = frozenset(_core_files())
-    fn = inspect.unwrap(registry.QUERIES[name])
-    files = [f for f in _module_files(fn.__module__, stop=core) if f not in core]
-    return _digest_files(files, read)
-
-
-def _registration_epochs() -> dict[str, int]:
-    """query -> round in which it was first registered (REGISTERED.json,
-    maintained by scripts/record_registered.py). Within the never-verified
-    slice of the rotation, older registrations outrank this round's new
-    additions, so a round that both drains backlog AND adds operators
-    cannot displace the backlog out of the driver's bounded window
-    (round-5 verdict #1). Missing file / missing name -> a large epoch
-    (new names yield to every recorded backlog name)."""
-    import json
-
-    base = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(base, "REGISTERED.json"), encoding="utf-8") as fh:
-            epochs = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    return {n: int(r) for n, r in epochs.items() if isinstance(r, (int, float))}
-
-
-def _dirty_queries() -> tuple[set[str], set[str]]:
-    """(dirty, core_dirty) since last verified, per the VERIFIED.json
-    manifest (written by scripts/record_verified.py at round start).
-
-    dirty: the query's OWN source closure changed (or it has no pinned
-    digest) — highest re-verification urgency. core_dirty: only the shared
-    engine core (registry/session/package inits) changed since this query
-    was verified — re-check soon, ordered by LRU, draining across at most
-    ceil(N/window) rounds without displacing own-closure-dirty queries.
-    Missing manifest -> nothing is dirty (pure LRU rotation)."""
-    import json
-
-    base = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(base, "VERIFIED.json"), encoding="utf-8") as fh:
-            manifest = json.load(fh)
-    except (OSError, ValueError):
-        return set(), set()
-    dirty: set[str] = set()
-    core_dirty: set[str] = set()
-    try:
-        core_now = core_digest()
-    except Exception:
-        core_now = None
-    for name in registry.QUERIES:
-        rec = manifest.get(name)
-        if rec is None:
-            # No pinned digest (verified before the manifest existed, or
-            # never): conservatively dirty — harmless for never-verified
-            # queries (they lead the LRU order anyway) and exactly right
-            # for verified-then-edited ones like r3's sim_* rework.
-            dirty.add(name)
-            continue
-        try:
-            if query_digest(name) != rec.get("digest"):
-                dirty.add(name)
-            elif core_now is None or rec.get("core") != core_now:
-                core_dirty.add(name)
-        except Exception:
-            dirty.add(name)
-    return dirty, core_dirty
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so the driver's bounded verification window re-checks what
-    most needs it: (1) queries whose latest CORRECTNESS row failed,
-    (2) never-verified queries (no driver row ever) — earlier registration
-    epochs first, so freshly registered queries never displace the
-    never-verified backlog, (3) verified queries whose OWN implementing
-    source changed since last verified, LRU first (round-7: these rank
-    BELOW the never-verified backlog — they carry a past green driver row,
-    a never-checked query carries none, so a source edit elsewhere in the
-    tree can no longer push backlog names out of the bounded window),
-    (4) queries verified before the last engine-core edit (core-dirty),
-    (5) least-recently-verified; LRU round then name breaks ties within
-    each rank, so a core edit drains deterministically across consecutive
-    bounded windows.
-    """
-    qs = dict(registry.QUERIES)
-    try:
-        last, failed = _correctness_history()
-        dirty, core_dirty = _dirty_queries()
-        epochs = _registration_epochs()
-    except Exception:
-        return qs
-    new_epoch = max(epochs.values(), default=0) + 1
-    return {
-        n: qs[n]
-        for n in sorted(
-            qs,
-            key=lambda n: (
-                0 if failed.get(n) else 1,
-                (0 if n not in last else 1) if n in dirty else (2 if n in core_dirty else 3),
-                epochs.get(n, new_epoch) if (n in dirty and n not in last) else 0,
-                last.get(n, 0),
-                n,
-            ),
-        )
-    }
+    """One entry per implemented operator from SURVEY.md §2, in registry
+    order."""
+    return dict(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -15,7 +15,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+BASE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, BASE)
 
 from hadoop_1_spark import registry  # noqa: E402
 from hadoop_1_spark.session import get_spark  # noqa: E402
@@ -239,9 +240,28 @@ def run_query(spark, name: str) -> float:
     return best
 
 
-def _prior_committed_rows(
-    n_tables: int = 3, base: str | None = None
-) -> dict[str, dict]:
+def _committed_tables(base: str = BASE) -> list[tuple[int, str]]:
+    """(N, path) of the committed BENCH_LOCAL_rNN.json tables, oldest
+    first. Only strictly-conforming names count: a suffixed table like
+    BENCH_LOCAL_r14_c8.json (the repo already uses that shape for its
+    8-core tables) is neither a drift baseline nor a table number."""
+    import glob
+
+    return sorted(
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(base, "BENCH_LOCAL_r*.json"))
+        if (m := re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", os.path.basename(p)))
+    )
+
+
+def _next_table_path(base: str = BASE) -> str:
+    """Where a full run writes its table: BENCH_LOCAL_rNN.json numbered one
+    past the newest committed table."""
+    tables = _committed_tables(base)
+    return os.path.join(base, f"BENCH_LOCAL_r{(tables[-1][0] if tables else 0) + 1:02d}.json")
+
+
+def _prior_committed_rows(n_tables: int = 3, base: str = BASE) -> dict[str, dict]:
     """Per-query drift baseline: the MIN spark_s/duck_s across the newest
     ``n_tables`` committed BENCH_LOCAL_r*.json tables (round-13 verdict
     #2a: comparing against only the immediately-prior table let a row
@@ -249,19 +269,7 @@ def _prior_committed_rows(
     sim_pq_topk went 4.77 -> 8.70 -> 16.74 s with the guard never firing;
     against the min of the last 3 tables a ratcheting row must eventually
     face the fresh-JVM re-measure)."""
-    import glob
-
-    if base is None:
-        base = os.path.dirname(os.path.abspath(__file__))
-    # keep only strictly-conforming names: a suffixed table like
-    # BENCH_LOCAL_r14_c8.json (the repo already uses that shape for the
-    # driver's 8-core runs) would crash the sort key (ADVICE r14)
-    matched = [
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(base, "BENCH_LOCAL_r*.json"))
-        if (m := re.search(r"r(\d+)\.json$", p))
-    ]
-    tables = [p for _, p in sorted(matched)]
+    tables = [p for _, p in _committed_tables(base)]
     out: dict[str, dict] = {}
     for path in tables[-n_tables:]:
         try:
@@ -408,21 +416,11 @@ def main() -> None:
     }
     # Full per-row table to a committed file (round-6 verdict #3): the
     # driver's BENCH_rN.json keeps only a 2000-char tail, so round-over-
-    # round per-row comparison needs its own artifact. N = current round
-    # (latest CORRECTNESS round + 1); override with SPARK_GRAFT_BENCH_OUT.
+    # round per-row comparison needs its own artifact. Numbered one past
+    # the newest committed table; override with SPARK_GRAFT_BENCH_OUT.
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if out_path is None:
-        import glob
-
-        base = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(base, "CORRECTNESS_r*.json"))
-            if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-        ]
-        out_path = os.path.join(
-            base, f"BENCH_LOCAL_r{(max(rounds) if rounds else 0) + 1:02d}.json"
-        )
+        out_path = _next_table_path()
     if only_set is not None:
         out_path = "-"  # a subset run must never overwrite the round table
     if out_path != "-":

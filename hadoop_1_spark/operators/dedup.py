@@ -38,13 +38,12 @@ SIMHASH_BANDS = 4
 SIMHASH_BAND_BITS = 15
 
 # Signature/fingerprint tables persist through the engine-wide tracked
-# cache (operators/caching.py) so the registry dispatch — which calls
-# caching.release_caches() directly (round-11: dedup.py no longer sits on
-# the dispatch path, so dedup edits dirty only dedup-backed closures, not
-# the whole ledger) — can release them between queries.
-from hadoop_1_spark.operators.caching import (  # noqa: F401
+# cache (operators/caching.py) so the registry dispatch, which calls
+# caching.release_caches() before every query, can release them between
+# queries.
+from hadoop_1_spark.operators.caching import (
+    local_checkpoint as _local_checkpoint,
     persist_tracked as _persist,
-    track as _track,
 )
 
 
@@ -936,8 +935,9 @@ def connected_components(
     join per round buys nothing at diameter <= 3). The driver reads ONE
     scalar per round: the label sum, strictly monotone decreasing until
     the fixpoint — it doubles as the round's materialization and needs
-    no extra join to compare. Labels persist each round to cut lineage;
-    at 100 TB swap persist for checkpoint() against a checkpoint dir.
+    no extra join to compare. Labels are locally checkpointed each round
+    to cut lineage; at 100 TB swap that for checkpoint() against a
+    checkpoint dir.
 
     The fixpoint (min reachable id) is unique, so the result is
     deterministic under any partitioning — which is what lets a recursive
@@ -947,15 +947,15 @@ def connected_components(
     # No distinct() needed: pairs are unique under (d1 < d2), so fwd and
     # rev are each duplicate-free and disjoint — and min-label propagation
     # is idempotent to duplicate edges anyway (groupBy-min absorbs them).
-    # edges + final labels go through the tracked cache so release_caches()
-    # (run by the registry dispatch before the NEXT query) frees them; the
-    # per-round label tables are checkpoint-materialized inside the loop.
+    # edges and the per-round label checkpoints are registered with
+    # caching so release_caches() (run by the registry dispatch before the
+    # NEXT query) frees them.
     edges = _persist(fwd.union(rev))
     # Seed labels with round 1 for free: min(v, min neighbor) from the same
     # single aggregation that would otherwise just enumerate vertices —
     # shallow near-dup clusters (diameter <= 3) then converge in 1-2 loop
     # rounds instead of 2-3.
-    labels = (
+    labels = seed = (
         edges.groupBy("v")
         .agg(F.least(F.col("v"), F.min("w")).alias("l"))
         .persist()
@@ -983,18 +983,18 @@ def connected_components(
             .groupBy("v")
             .agg(F.min("wl").alias("nl"))
         )
-        new = (
+        # localCheckpoint (not persist) per round: truncates lineage so
+        # round N's plan doesn't replay rounds 1..N-1, and materializes in
+        # the same job the fixpoint aggregate runs (eager=False).
+        new = _local_checkpoint(
             labels.join(nbr, "v", "left")
             .select("v", F.least("l", F.coalesce("nl", "l")).alias("l"))
-            # localCheckpoint (not persist) per round: truncates lineage so
-            # round N's plan doesn't replay rounds 1..N-1, and materializes
-            # in the same job the fixpoint aggregate runs (eager=False).
-            .localCheckpoint(eager=False)
         )
         # label sum is strictly monotone decreasing until convergence —
         # one aggregate materializes the round AND detects the fixpoint
         cur_sum = new.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
-        labels.unpersist()
+        if labels is seed:
+            seed.unpersist()
         labels = new
         if cur_sum == prev_sum:
             converged = True
@@ -1012,7 +1012,6 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    _track(labels)
     return labels.select(F.col("v"), F.col("l").alias("cluster"))
 
 

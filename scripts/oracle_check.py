@@ -1,7 +1,8 @@
 """Local replica of the driver's correctness gate: run a registered query
 on Spark AND its DuckDB oracle SQL at sf0.01, compare row count, column
 names, and exact values (columns sorted by name, rows sorted by all
-columns) — the same strictness as the driver's value-hash.
+columns, floats bit for bit). The tier-1 suite compares every oracled
+query at sf0.001 with the same ``oracle_mismatch``.
 
 Usage: python scripts/oracle_check.py [query ...]   (default: all oracles)
 """
@@ -41,48 +42,56 @@ def struct_pack(v: float) -> bytes:
     return struct.pack("<d", v)
 
 
+def create_views(con, sf_dir: str) -> None:
+    """Register each table under ``sf_dir`` as a DuckDB view of its name."""
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+
+
+def oracle_mismatch(name: str, cols: list[str], rows: list[tuple], con) -> str | None:
+    """Compare the rows collected from query ``name`` (column names
+    ``cols``) with its oracle SQL run on ``con``. None when they match
+    exactly: equal column names, row count and values, columns sorted by
+    name and rows sorted (floats bit-exact, see ``_canon``); otherwise a
+    description of the first difference."""
+    odf = con.sql(registry.ORACLE[name])
+    oracle_cols = list(odf.columns)
+    oracle_rows = odf.fetchall()
+    if sorted(cols) != sorted(oracle_cols):
+        return f"SCHEMA mismatch {sorted(cols)} vs {sorted(oracle_cols)}"
+    if len(rows) != len(oracle_rows):
+        return f"ROWS mismatch {len(rows)} vs {len(oracle_rows)}"
+    s_ix = [cols.index(c) for c in sorted(cols)]
+    o_ix = [oracle_cols.index(c) for c in sorted(oracle_cols)]
+    s = sorted(tuple(_canon(r[i]) for i in s_ix) for r in rows)
+    o = sorted(tuple(_canon(r[i]) for i in o_ix) for r in oracle_rows)
+    if s == o:
+        return None
+    bad = next(i for i, (x, y) in enumerate(zip(s, o)) if x != y)
+    return f"VALUE mismatch at sorted row {bad}:\n    spark : {s[bad]}\n    oracle: {o[bad]}"
+
+
 def check(name: str, spark, con) -> bool:
     try:
         sdf = registry.QUERIES[name](spark, SF_DIR)
-        spark_rows = [tuple(r) for r in sdf.collect()]
+        rows = [tuple(r) for r in sdf.collect()]
     except Exception as e:  # keep sweeping; an exception is a hard FAIL
         first = str(e).splitlines()[0] if str(e) else type(e).__name__
         print(f"{name}: FAIL (exception: {first[:200]})")
         return False
-    spark_cols = list(sdf.columns)
-    odf = con.sql(registry.ORACLE[name])
-    oracle_cols = list(odf.columns)
-    oracle_rows = [tuple(r) for r in odf.fetchall()]
-    ok = True
-    if sorted(spark_cols) != sorted(oracle_cols):
-        print(f"  {name}: SCHEMA mismatch {sorted(spark_cols)} vs {sorted(oracle_cols)}")
-        ok = False
-    if len(spark_rows) != len(oracle_rows):
-        print(f"  {name}: ROWS mismatch {len(spark_rows)} vs {len(oracle_rows)}")
-        ok = False
-    if ok:
-        s_ix = [spark_cols.index(c) for c in sorted(spark_cols)]
-        o_ix = [oracle_cols.index(c) for c in sorted(oracle_cols)]
-        s = sorted(tuple(_canon(r[i]) for i in s_ix) for r in spark_rows)
-        o = sorted(tuple(_canon(r[i]) for i in o_ix) for r in oracle_rows)
-        if s != o:
-            bad = next(i for i, (x, y) in enumerate(zip(s, o)) if x != y)
-            print(f"  {name}: VALUE mismatch at sorted row {bad}:")
-            print(f"    spark : {s[bad]}")
-            print(f"    oracle: {o[bad]}")
-            ok = False
-    status = "ok" if ok else "FAIL"
-    print(f"{name}: {status} ({len(spark_rows)} rows)")
-    return ok
+    problem = oracle_mismatch(name, list(sdf.columns), rows, con)
+    if problem:
+        print(f"  {name}: {problem}")
+    print(f"{name}: {'FAIL' if problem else 'ok'} ({len(rows)} rows)")
+    return problem is None
 
 
 def main() -> None:
     names = sys.argv[1:] or sorted(registry.ORACLE)
     spark = get_spark("oracle_check")
     con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    create_views(con, SF_DIR)
     failures = [n for n in names if n in registry.ORACLE and not check(n, spark, con)]
     missing = [n for n in names if n not in registry.ORACLE]
     if missing:

@@ -1,12 +1,11 @@
 """Shared test fixtures: one SparkSession per test run, a DuckDB connection
-with the star-schema views registered (mirrors the driver's oracle setup),
-and an order-insensitive compare helper reproducing the driver's
-row-count + schema + value-hash protocol at sf0.001 for speed.
+with the star-schema views registered (scripts/oracle_check.py's setup),
+and a compare helper running scripts/oracle_check.py's exact row-count +
+schema + value comparison at sf0.001 for speed.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -15,7 +14,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hadoop_1_spark.session import TABLES, get_spark  # noqa: E402
+from hadoop_1_spark.session import get_spark  # noqa: E402
+from scripts.oracle_check import create_views, oracle_mismatch  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -30,46 +30,21 @@ def spark():
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    create_views(con, SF_DIR)
     yield con
     con.close()
 
 
-def _normalize(rows, cols):
-    """Sort columns by name, normalize floats, return a sorted multiset of
-    rows — order-insensitive, like the driver's value hash."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for row in rows:
-        norm = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                v = "nan" if math.isnan(v) else f"{v:.9g}"
-            norm.append(str(v))
-        out.append(tuple(norm))
-    out.sort()
-    return out
+def assert_frame_matches_oracle(duck, name, sdf):
+    """Collect ``sdf``, registered query ``name``'s DataFrame, and assert
+    it equals the oracle's result exactly (scripts/oracle_check.py)."""
+    problem = oracle_mismatch(name, list(sdf.columns), [tuple(r) for r in sdf.collect()], duck)
+    assert problem is None, f"{name}: {problem}"
 
 
-def assert_query_matches_oracle(spark, duck, name, sf_dir=SF_DIR):
+def assert_query_matches_oracle(spark, duck, name):
     """Run a registered query and its oracle SQL; assert row count, column
-    names, and order-insensitive values match."""
+    names, and order-insensitive values match exactly."""
     from hadoop_1_spark import registry
 
-    sdf = registry.QUERIES[name](spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
-
-    res = duck.execute(registry.ORACLE[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-
-    assert sorted(scols) == sorted(dcols), f"{name}: columns {scols} vs {dcols}"
-    assert len(srows) == len(drows), f"{name}: rowcount {len(srows)} vs {len(drows)}"
-    snorm = _normalize(srows, scols)
-    dnorm = _normalize(drows, dcols)
-    mismatches = [(a, b) for a, b in zip(snorm, dnorm) if a != b]
-    assert not mismatches, f"{name}: first value mismatches {mismatches[:5]}"
+    assert_frame_matches_oracle(duck, name, registry.QUERIES[name](spark, SF_DIR))

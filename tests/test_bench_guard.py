@@ -78,3 +78,13 @@ def test_contract_line_is_compact():
     assert set(json.loads(line)) == {
         "metric", "value", "unit", "queries", "oracle_total", "sf"
     }
+
+
+def test_next_table_is_one_past_newest_committed(tmp_path):
+    assert bench._next_table_path(str(tmp_path)) == str(tmp_path / "BENCH_LOCAL_r01.json")
+    _write_table(tmp_path, 7, {})
+    _write_table(tmp_path, 16, {})
+    # a suffixed table and the old round ledger do not set the number
+    for stray in ("BENCH_LOCAL_r17_c8.json", "CORRECTNESS_r30.json"):
+        (tmp_path / stray).write_text("{}")
+    assert bench._next_table_path(str(tmp_path)) == str(tmp_path / "BENCH_LOCAL_r17.json")

@@ -95,6 +95,31 @@ def test_connected_components_chains(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
+def test_connected_components_checkpoints_released_by_next_query(spark):
+    """connected_components' per-round local checkpoints are registered
+    with caching, so the next registered query's release_caches() frees
+    their blocks (DataFrame.unpersist() alone does not free a local
+    checkpoint)."""
+    from hadoop_1_spark import registry
+    from hadoop_1_spark.operators import caching
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def rdds_with_blocks():
+        return {i.id() for i in jsc.getRDDStorageInfo()}
+
+    caching.release_caches()
+    before = rdds_with_blocks()
+    # held, so a JVM GC cannot free the checkpoints (ContextCleaner) in
+    # the release's place
+    out = registry.QUERIES["dedup_clusters"](spark, SF_DIR)
+    out.collect()
+    cc = rdds_with_blocks() - before
+    assert cc, "dedup_clusters left no blocks to release"
+    registry.QUERIES["grep"](spark, SF_DIR).collect()
+    assert not rdds_with_blocks() & cc
+
+
 def test_dedup_clusters_matches_oracle(spark, duck):
     from tests.conftest import assert_query_matches_oracle
 

@@ -1,9 +1,10 @@
-"""Global physical-plan lint over EVERY registered query — the
-anti-pattern guard the per-query plan tests can't give: a future edit
-that sneaks a cartesian product or a row-at-a-time Python UDF into any
-query fails here, not in a code review.
+"""One build per registered query at sf0.001, checked twice: a global
+physical-plan lint, then the query's DuckDB oracle.
 
-Rules (crisp, plan-text-decidable):
+The lint is the anti-pattern guard the per-query plan tests can't give:
+a future edit that sneaks a cartesian product or a row-at-a-time Python
+UDF into any query fails here, not in a code review. Rules (crisp,
+plan-text-decidable):
 - no CartesianProduct anywhere, except the explicitly-labeled O(n^2)
   correctness baseline (dedup_embedding_cosine — its docstring names the
   LSH twin as the scale path);
@@ -11,10 +12,14 @@ Rules (crisp, plan-text-decidable):
   must be Arrow-batched (ArrowEvalPython / MapInPandas /
   FlatMapGroupsInPandas).
 
-Plans are built (not executed) at sf0.001; queries that materialize
-driver-side state during CONSTRUCTION (iterative trainers) still build
-quickly at that scale. Streaming queries execute to a sink and expose
-only a sink-read batch plan — skipped like scripts/plan_audit.py does.
+Queries that materialize driver-side state during CONSTRUCTION
+(iterative trainers) still build quickly at that scale. Streaming
+queries execute to a sink and expose only a sink-read batch plan, so
+they skip the lint (as scripts/plan_audit.py does) but not the oracle.
+
+Every query in ``registry.ORACLE`` is then collected and compared with
+its oracle exactly as scripts/oracle_check.py does (column names, row
+count, bit-exact values, order-insensitive).
 
 Fact-table broadcast rule (session.py, "Broadcast policy"): the joins
 over lineitem are executed at sf0.1, and no BroadcastExchange in the
@@ -29,6 +34,8 @@ import os
 
 import pytest
 
+from tests.conftest import SF_DIR, assert_frame_matches_oracle
+
 SKIP = {
     "stream_tumbling_counts",
     "stream_sliding_avg",
@@ -38,25 +45,26 @@ SKIP = {
 
 CARTESIAN_ALLOWED = {"dedup_embedding_cosine"}
 
-SF_DIR = "/root/testdata/sf0.001"
-
 
 def _all_query_names():
     from hadoop_1_spark import registry
     import hadoop_1_spark.queries  # noqa: F401
 
-    return sorted(n for n in registry.QUERIES if n not in SKIP)
+    return sorted(registry.QUERIES)
 
 
 @pytest.mark.parametrize("name", _all_query_names())
-def test_plan_lint(spark, name):
+def test_plan_lint(spark, duck, name):
     from hadoop_1_spark import registry
 
     df = registry.QUERIES[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if name not in CARTESIAN_ALLOWED:
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
+    if name not in SKIP:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if name not in CARTESIAN_ALLOWED:
+            assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
+        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
+    if name in registry.ORACLE:
+        assert_frame_matches_oracle(duck, name, df)
 
 
 SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
