@@ -44,12 +44,6 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-persisted DataFrame for release."""
-    _LIVE_CACHES.append(df)
-    return df
-
-
 def local_checkpoint(df: DataFrame) -> DataFrame:
     """``df.localCheckpoint(eager=False)``, its blocks registered for
     release (module docstring)."""

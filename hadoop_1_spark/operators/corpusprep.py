@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hadoop_1_spark.operators.sampling import md5_mod
-from hadoop_1_spark.operators import textops
+from hadoop_1_spark.operators import folds, textops
 
 
 def hash_split(
@@ -215,7 +215,7 @@ def decontaminate_semantic(
     pair; callers drop vec_ids with a left-anti join.
 
     Band WIDTH is derived in-plan from the corpus size — the
-    knn_graph_auto rule (similarity.auto_nbits_expr: smallest b in
+    knn_graph_auto rule (folds.occupancy_nbits: smallest b in
     [min_bits, max_bits] with 2^b * target >= n, exact integer CASE
     chain) — so expected per-band candidates stay ~bands * target *
     |benchmark| instead of growing with corpus x benchmark occupancy
@@ -235,24 +235,21 @@ def decontaminate_semantic(
     a broadcast 1-row count), and the only exchange is the distinct
     over surviving pairs. Verify is the exact fixed-order DOT_FOLD
     cosine inline on the join output, as in embedding_lsh_pairs."""
-    from hadoop_1_spark.operators import similarity
-
     all_signs = [
         row
         for b in range(bands)
-        for row in similarity.hyperplane_signs(max_bits, seed=100 + b)
+        for row in folds.hyperplane_signs(max_bits, seed=100 + b)
     ]
+    nbits = folds.occupancy_nbits("_cnt", target_occupancy, min_bits, max_bits)
     nrel = emb.agg(F.count(F.lit(1)).alias("_cnt")).select(
-        similarity.auto_nbits_expr(
-            F.col("_cnt"), target_occupancy, min_bits, max_bits
-        ).alias("_nbits")
+        F.expr(f"cast({nbits} as int)").alias("_nbits")
     )
 
     def side(pred: Column, name: str) -> DataFrame:
         pre = emb.where(pred).crossJoin(F.broadcast(nrel)).select(
             F.col(id_col).alias(name),
             F.col(vec_col).alias(f"_v_{name}"),
-            similarity.project_udf(all_signs)(F.col(vec_col)).alias("_p"),
+            folds.project_udf(all_signs)(F.col(vec_col)).alias("_p"),
             "_nbits",
         )
         return pre.select(
@@ -265,7 +262,7 @@ def decontaminate_semantic(
                         F.concat_ws(
                             ":",
                             F.lit(str(b)),
-                            similarity.bucket_from_sums_dyn(
+                            folds.bucket_from_sums(
                                 "_p.sums", b * max_bits, max_bits, "_nbits"
                             ).cast("string"),
                         )
@@ -283,7 +280,7 @@ def decontaminate_semantic(
             F.col(id_col),
             "bench_id",
             F.round(
-                similarity.DOT_FOLD(F.col(f"_v_{id_col}"), F.col("_v_bench_id"))
+                folds.DOT_FOLD(F.col(f"_v_{id_col}"), F.col("_v_bench_id"))
                 / (F.col(f"_n_{id_col}") * F.col("_n_bench_id")),
                 9,
             ).alias("cosine"),
@@ -406,7 +403,6 @@ def mix_report(
     df: DataFrame,
     group_cols: list[str] | None = None,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Data-mixture report: per (source, lang) document and token counts
     plus each cell's integer-exact share of the corpus token budget

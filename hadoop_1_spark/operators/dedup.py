@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import textops
+from hadoop_1_spark.operators import folds, textops
 from hadoop_1_spark.operators.textops import shingle_hash
 
 # SimHash banding: 60-bit hash split into 4 bands of 15 bits. By pigeonhole,
@@ -343,51 +343,6 @@ def simhash_pairs(
     ).where(F.col("hamming") <= max_hamming)
 
 
-def dot_chain(a: Column, b: Column, dims: int = 64) -> Column:
-    """Engine-portable dot product: a left-fold with a DOUBLE accumulator,
-    0.0 + a[1]*b[1] + a[2]*b[2] + ... The DuckDB oracle emits the same
-    left-associated chain (sql_dot_chain), so IEEE doubles make it
-    bit-identical — with none of the decimal-fold arithmetic tax AND none
-    of the giant-expression codegen tax (an unrolled 64-term chain makes
-    whole-stage codegen emit ~1 MB methods that take seconds to compile
-    per plan; the higher-order fold stays interpreted and cheap). `dims`
-    only parameterizes the SQL twin; the fold is length-agnostic."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def sql_dot_chain(a: str, b: str, dims: int) -> str:
-    """The DuckDB twin of dot_chain — same fold order including the 0.0
-    seed; out-of-range terms coalesce to 0 (exact under IEEE: x+0.0==x)."""
-    return "0.0 + " + " + ".join(
-        f"COALESCE(CAST({a}[{i}] AS DOUBLE), 0.0) * COALESCE(CAST({b}[{i}] AS DOUBLE), 0.0)"
-        for i in range(1, dims + 1)
-    )
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Decimal-fold cosine (order-independent sums): kept as the
-    variable-length/reference variant; hot paths use dot_chain with
-    precomputed norms. Matches the decimal-sum oracle bit-for-bit."""
-    def dsum(arr: Column) -> Column:
-        # Spark decimal(38,18)+decimal(38,18) widens to (38,17); re-cast so
-        # the fold keeps a stable type. The per-step 1e-18 rounding is
-        # absorbed by the final round(..., 9).
-        return F.aggregate(
-            arr,
-            F.lit(0).cast("decimal(38,18)"),
-            lambda acc, x: (acc + x.cast("decimal(38,18)")).cast("decimal(38,18)"),
-        ).cast("double")
-
-    dot = dsum(F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double"))))
-    na = dsum(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
-    nb = dsum(F.transform(b, lambda x: x.cast("double") * x.cast("double")))
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
 def embedding_lsh_pairs(
     emb: DataFrame,
     threshold: float = 0.45,
@@ -395,7 +350,6 @@ def embedding_lsh_pairs(
     bits: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int = 64,
 ) -> DataFrame:
     """Embedding near-dup via banded random-hyperplane LSH: the 100 TB
     path for embedding_cosine_pairs. Each vector gets `bands` bucket ids
@@ -407,28 +361,25 @@ def embedding_lsh_pairs(
     p = 1-θ/π — the OR-of-ANDs S-curve; work scales with bucket collisions
     (the only large shuffle carries (bucket, id)), never O(n²).
     """
-    from hadoop_1_spark.operators import similarity
-
     # One Arrow pass computes norm + all bands*bits hyperplane sums
-    # (similarity.project_udf — bit-identical fast twin of the
-    # dot_chain/signed_sums_fused reference folds); the bucket bits are
-    # derived in a second select so the pass evaluates once per row.
+    # (folds.project_udf); the bucket bits are derived in a second select
+    # so the pass evaluates once per row.
     all_signs = [
         row
         for b in range(bands)
-        for row in similarity.hyperplane_signs(bits, seed=100 + b)
+        for row in folds.hyperplane_signs(bits, seed=100 + b)
     ]
     pre = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        similarity.project_udf(all_signs)(F.col(vec_col)).alias("_p"),
+        folds.project_udf(all_signs)(F.col(vec_col)).alias("_p"),
     )
     base = pre.select(
         "id",
         "v",
         F.col("_p.nrm").alias("nrm"),
         *[
-            similarity.bucket_from_sums("_p.sums", b * bits, bits).alias(f"b{b}")
+            folds.bucket_from_sums("_p.sums", b * bits, bits).alias(f"b{b}")
             for b in range(bands)
         ],
     )
@@ -473,7 +424,7 @@ def embedding_lsh_pairs(
             F.col("x.id").alias("d1"),
             F.col("y.id").alias("d2"),
             F.round(
-                similarity.DOT_FOLD(F.col("x.v"), F.col("y.v"))
+                folds.DOT_FOLD(F.col("x.v"), F.col("y.v"))
                 / (F.col("x.nrm") * F.col("y.nrm")),
                 9,
             ).alias("cosine"),
@@ -488,24 +439,21 @@ def embedding_cosine_pairs(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int = 64,
 ) -> DataFrame:
     """Embedding near-dup: all-pairs cosine >= threshold. Correctness
     baseline (O(n^2) pairs); the scale path is LSH bucketing
     (similarity.lsh_ann_topk) feeding the same verify. Norms are computed
     once per VECTOR (not per pair) — 3x less arithmetic on the O(n^2)
     stage."""
-    from hadoop_1_spark.operators import similarity
-
     a = emb.select(
         F.col(id_col).alias("d1"),
         F.col(vec_col).alias("v1"),
-        similarity.NORM(F.col(vec_col)).alias("n1"),
+        folds.NORM(F.col(vec_col)).alias("n1"),
     )
     b = emb.select(
         F.col(id_col).alias("d2"),
         F.col(vec_col).alias("v2"),
-        similarity.NORM(F.col(vec_col)).alias("n2"),
+        folds.NORM(F.col(vec_col)).alias("n2"),
     )
     return (
         a.crossJoin(b)
@@ -514,7 +462,7 @@ def embedding_cosine_pairs(
             "d1",
             "d2",
             F.round(
-                similarity.DOT_FOLD(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")),
+                folds.DOT_FOLD(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")),
                 9,
             ).alias("cosine"),
         )
@@ -537,8 +485,6 @@ def semantic_dedup_pairs(
     the cluster id, shuffled once on that key, with AQE skew-split
     covering any oversized cell. Same cosine contract as
     embedding_cosine_pairs (fold + round 9)."""
-    from hadoop_1_spark.operators import similarity
-
     # Pin ONE materialization of (id, cluster, vec, norm): both self-join
     # sides read it, so the k-means subplan (3 assign rounds) and the norm
     # pass run once, not once per side — same discipline as the embedding
@@ -555,7 +501,7 @@ def semantic_dedup_pairs(
             F.col(id_col),
             F.col("cluster"),
             F.col(vec_col),
-            similarity.NORM(F.col(vec_col)).alias("_n"),
+            folds.NORM(F.col(vec_col)).alias("_n"),
         )
     )
     a = e.select(
@@ -586,7 +532,7 @@ def semantic_dedup_pairs(
             "d1",
             "d2",
             F.round(
-                similarity.DOT_FOLD(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")),
+                folds.DOT_FOLD(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")),
                 9,
             ).alias("cosine"),
         )
@@ -611,7 +557,7 @@ def semantic_dedup_pairs_cellwise(
     crosses the Arrow boundary once (one vector per ROW), and the in-cell
     pair dots are dense numpy per-DIMENSION outer-product accumulation:
     acc[i,j] += M[i,d] * M[j,d] in ascending d — the exact flop order of
-    DOT_FOLD / dot_chain per pair, so cosines are bit-identical to the
+    folds.DOT_FOLD / folds.dot_spark per pair, so cosines are bit-identical to the
     join form and the same oracle replays both (r8 A/B at sf1:
     140 s -> 2.5 s, identical result hash).  The division and HALF_UP
     round stay JVM-side, also as in the join form; the UDF prefilters at

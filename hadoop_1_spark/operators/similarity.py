@@ -18,209 +18,24 @@ Scale notes:
 - Brute force is O(|corpus| x |queries|) dot products — fine for reranking
   a candidate set, wrong as the primary path; LSH/IVF cut the scored set
   by the bucket/cell factor and their shuffles carry only (bucket, id).
-- All dot products are built-in column expressions; the double-addition
-  chains are emitted in a fixed order so results are bit-identical across
-  engines (IEEE doubles, no reassociation).
+- The fixed-order double folds (dot, norm, squared L2, hyperplane signed
+  sums, bucket bits, occupancy width) live in operators/folds.py, each
+  beside its DuckDB and Arrow twins, so results are bit-identical across
+  engines (IEEE doubles, no reassociation). Small broadcast sides (the
+  query set) use the parsed Spark SQL text; corpus-sized passes use the
+  Arrow twins.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
-from hadoop_1_spark.operators.dedup import dot_chain
-
-DIMS = 64
-
-
-def _norm(vec: Column) -> Column:
-    return F.sqrt(dot_chain(vec, vec, DIMS))
-
-
-def hyperplane_signs(nbits: int, dims: int = DIMS, seed: int = 42) -> list[list[int]]:
-    """Deterministic Rademacher (+1/-1) hyperplane matrix from md5 — plain
-    constants shared verbatim by the Spark plan and the oracle SQL."""
-    return [
-        [
-            1 if hashlib.md5(f"{seed}:{i}:{d}".encode()).digest()[0] & 1 else -1
-            for d in range(dims)
-        ]
-        for i in range(nbits)
-    ]
-
-
-def _sign_literal(signs: list[int]) -> str:
-    """±1 sign row as a SQL double-array literal text. Signs are exactly
-    ±1, so ``1.0D``/``-1.0D`` parse to the identical doubles F.lit built —
-    but ONE F.expr parse replaces ~dims py4j round-trips per row (the r13
-    kmeans _sum_exprs lesson applied to the LSH sign matrices; a 16x64
-    fused matrix was ~1k driver round-trips ≈ 1 s of build chatter)."""
-    return "array(" + ",".join("1.0D" if s > 0 else "-1.0D" for s in signs) + ")"
-
-
-def _signed_sum(vec: Column, signs: list[int]) -> Column:
-    """Signed sum as a left-fold with a double accumulator (same fp order
-    as the oracle's 0.0 + ... chain; a fold, not an unrolled chain, for
-    the same codegen-size reason as dedup.dot_chain)."""
-    sign_arr = F.expr(_sign_literal(signs))
-    return F.aggregate(
-        F.zip_with(vec, sign_arr, lambda x, s: x.cast("double") * s),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def bucket_expr(vec: Column, signs: list[list[int]]) -> Column:
-    """LSH bucket id: integer whose bit i is sign(h_i . v).
-
-    One fold per hyperplane — fine for a single small bucket (e.g. the
-    broadcast query side). Multi-band call sites should use
-    ``signed_sums_fused`` + ``bucket_from_sums`` so the vector is
-    traversed once for ALL bands x bits hyperplanes."""
-    acc = F.lit(0).cast("int")
-    for i, row in enumerate(signs):
-        acc = acc + F.when(_signed_sum(vec, row) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return acc
-
-
-def signed_sums_fused(vec: Column, signs_all: list[list[int]]) -> Column:
-    """ALL hyperplane dot products in ONE vector traversal.
-
-    Folds over the dimension index with an array<double> accumulator (one
-    slot per hyperplane); step d does acc[i] += v[d] * signs[i][d] via a
-    zip_with against the transposed sign matrix. Per-hyperplane addition
-    order is the same left-fold as ``_signed_sum`` (0.0 + v1*s1 + v2*s2 +
-    ...), so results stay bit-identical to the oracle's SQL chain — this is
-    purely an evaluation-count fix (bands x bits folds -> 1)."""
-    n = len(signs_all)
-    dims = len(signs_all[0])
-    # one parsed literal for the whole transposed matrix (see _sign_literal)
-    sign_t = F.expr(
-        "array("
-        + ",".join(
-            _sign_literal([signs_all[i][d] for i in range(n)])
-            for d in range(dims)
-        )
-        + ")"
-    )
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(dims)),
-        F.array_repeat(F.lit(0.0), n),
-        lambda acc, d: F.zip_with(
-            acc,
-            F.element_at(sign_t, d),
-            lambda a, s: a + F.element_at(vec, d).cast("double") * s,
-        ),
-    )
-
-
-def bucket_from_sums(sums_sql: str, offset: int, bits: int) -> Column:
-    """Bucket id from a ``signed_sums_fused`` slice: bit i is
-    sign(sums[offset + i]). Keep this in a SEPARATE select from the fold —
-    CollapseProject won't inline a non-cheap expression referenced ``bits``
-    times, so the fold evaluates once.
-
-    r15: takes the sums column as SQL TEXT (e.g. "_p.sums") and composes
-    the whole bit sum as ONE parsed expression — the Column-loop form was
-    ~6 py4j round-trips per bit, a measurable slice of every LSH
-    builder's plan-construction time. if/element_at/int literals parse to
-    the same typed tree the Column calls produced (int accumulator, same
-    left-associated addition), so bucket ids are bit-identical."""
-    text = " + ".join(
-        f"if(element_at({sums_sql}, {offset + i + 1}) > 0, {1 << i}, 0)"
-        for i in range(bits)
-    )
-    return F.expr(f"cast(({text}) as int)")
-
-
-# ---------------------------------------------------------------------------
-# Arrow fast path.
-#
-# The higher-order folds above are the engine-portable REFERENCE forms (the
-# oracle SQL mirrors them term by term), but Catalyst evaluates them
-# interpreted — measured at sf0.1 they dominate the embedding queries
-# (fused 16x64 fold: 0.88 s for 2000 rows; the same math below: 0.28 s).
-# These pandas UDFs are drop-in replacements that keep results BIT-IDENTICAL:
-# numpy applies each += / * elementwise over the batch, dimension by
-# dimension, so every output element sees exactly the left-fold operation
-# order (0.0 + v1*s1 + v2*s2 + ...) of the expression form — IEEE doubles,
-# no reassociation, no pairwise summation (asserted in
-# tests/test_similarity.py::test_arrow_paths_bit_identical).
-# Rounding stays JVM-side (F.round) — numpy rounds HALF_EVEN, Spark/DuckDB
-# HALF_UP.
-
-
-def project_udf(signs_all: list[list[int]]):
-    """Pandas UDF: norm + ALL hyperplane signed sums in one Arrow pass.
-
-    Returns struct<nrm double, sums array<double>> — the fast twin of
-    ``sqrt(dot_chain(v, v))`` + ``signed_sums_fused(v, signs_all)``."""
-    from pyspark.sql.functions import pandas_udf
-
-    S = np.array(signs_all, dtype=np.float64)  # (n_hyperplanes, dims)
-    ret = StructType(
-        [
-            StructField("nrm", DoubleType()),
-            StructField("sums", ArrayType(DoubleType())),
-        ]
-    )
-
-    @pandas_udf(ret)
-    def _proj(v: pd.Series) -> pd.DataFrame:
-        m = np.vstack(v.to_numpy()).astype(np.float64)  # (rows, dims)
-        acc = np.zeros((m.shape[0], S.shape[0]))
-        nrm2 = np.zeros(m.shape[0])
-        for d in range(m.shape[1]):
-            acc += m[:, d : d + 1] * S[:, d]
-            nrm2 += m[:, d] * m[:, d]
-        return pd.DataFrame({"nrm": np.sqrt(nrm2), "sums": list(acc)})
-
-    return _proj
-
-
-def _dot_fold_udf():
-    """Pandas UDF twin of ``dot_chain(a, b)`` (unrounded): the caller applies
-    F.round / the norm division JVM-side."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DoubleType())
-    def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.vstack(a.to_numpy()).astype(np.float64)
-        mb = np.vstack(b.to_numpy()).astype(np.float64)
-        acc = np.zeros(ma.shape[0])
-        for d in range(ma.shape[1]):
-            acc += ma[:, d] * mb[:, d]
-        return pd.Series(acc)
-
-    return _dot
-
-
-DOT_FOLD = _dot_fold_udf()
-
-
-def norm_udf():
-    """Pandas UDF twin of ``sqrt(dot_chain(v, v))``."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DoubleType())
-    def _nrm(v: pd.Series) -> pd.Series:
-        m = np.vstack(v.to_numpy()).astype(np.float64)
-        acc = np.zeros(m.shape[0])
-        for d in range(m.shape[1]):
-            acc += m[:, d] * m[:, d]
-        return pd.Series(np.sqrt(acc))
-
-    return _nrm
-
-
-NORM = norm_udf()
+from hadoop_1_spark.operators import folds
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -234,8 +49,8 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
 
 def _cosine(qv: Column, cv: Column, qn: Column, cn: Column) -> Column:
     # fixed-order double fold / precomputed norms — bit-identical to the
-    # oracle's identical SQL chain (see dedup.dot_chain); the fold runs as
-    # the Arrow DOT_FOLD twin, division + HALF_UP round stay JVM-side.
+    # oracle's folds.dot_duck chain; the fold runs as the Arrow
+    # folds.DOT_FOLD twin, division + HALF_UP round stay JVM-side.
     #
     # Scale contract (r10, closing the r8 audit note): this is the
     # PER-PAIR scorer — both vectors cross Arrow for every pair, so the
@@ -251,7 +66,7 @@ def _cosine(qv: Column, cv: Column, qn: Column, cn: Column) -> Column:
     # dedup.semantic_dedup_pairs_cellwise: one Arrow crossing per ROW,
     # in-cell outer-product dots; the r8 sf1 probe measured 22-77x
     # per-pair penalties before those landed).
-    return F.round(DOT_FOLD(qv, cv) / (qn * cn), 9)
+    return F.round(folds.DOT_FOLD(qv, cv) / (qn * cn), 9)
 
 
 def _score(q: DataFrame, c: DataFrame, extra_cond=None) -> DataFrame:
@@ -265,6 +80,31 @@ def _score(q: DataFrame, c: DataFrame, extra_cond=None) -> DataFrame:
     )
 
 
+def _query_side(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    signs: list[list[int]] | None = None,
+) -> DataFrame:
+    """(query_id, qv, qn[, qb]) for a small, broadcast query set, built
+    from the parsed Spark-text folds. With ``signs`` the LSH bucket ``qb``
+    is derived as on the corpus side: signed sums in one select, bucket
+    bits in the next (folds.bucket_from_sums)."""
+    v = folds.quote_ident(vec_col)
+    cols = [
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        F.expr(folds.norm_spark(v)).alias("qn"),
+    ]
+    if signs is None:
+        return queries.select(*cols)
+    return queries.select(
+        *cols, F.expr(folds.signed_sums_spark(v, signs)).alias("_qs")
+    ).select(
+        "query_id", "qv", "qn", folds.bucket_from_sums("_qs", 0, len(signs)).alias("qb")
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -274,19 +114,13 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast the query set, score the full
     corpus, per-query window rank. Ties broken by neighbor_id asc."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-        )
-    )
+    q = F.broadcast(_query_side(queries, id_col, vec_col))
     # corpus side: Arrow norm (bit-identical to the fold; the query side
     # stays expression-form — it is tiny and feeds a broadcast build)
     c = emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        NORM(F.col(vec_col)).alias("cn"),
+        folds.NORM(F.col(vec_col)).alias("cn"),
     )
     return _topk(_score(q, c), k)
 
@@ -302,26 +136,19 @@ def lsh_ann_topk(
 ) -> DataFrame:
     """LSH-bucketed ANN: score only corpus vectors in the query's bucket.
     nbits tunes recall/cost: scored set shrinks ~2^nbits-fold."""
-    signs = hyperplane_signs(nbits, seed=seed)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), signs).alias("qb"),
-        )
-    )
+    signs = folds.hyperplane_signs(nbits, seed=seed)
+    q = F.broadcast(_query_side(queries, id_col, vec_col, signs))
     # corpus side: one Arrow pass computes norm + all nbits hyperplane sums
-    # (bit-identical fast twin of _norm + signed_sums_fused)
+    # (folds.project_udf, bit-identical to the query side's text folds)
     c = emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        project_udf(signs)(F.col(vec_col)).alias("_p"),
+        folds.project_udf(signs)(F.col(vec_col)).alias("_p"),
     ).select(
         "neighbor_id",
         "cv",
         F.col("_p.nrm").alias("cn"),
-        bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
+        folds.bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
     )
     scored = q.join(c, (q["qb"] == c["cb"]) & (q["query_id"] != c["neighbor_id"])).select(
         "query_id",
@@ -340,8 +167,8 @@ def lsh_park(
     vec_col: str = "embedding",
 ) -> None:
     """Park the LSH layout once for a static corpus: one fused Arrow pass
-    computes every hyperplane sum + the norm (project_udf — bit-identical
-    to the in-plan bucket_expr/_norm by the signed_sums_fused contract),
+    computes every hyperplane sum + the norm (folds.project_udf —
+    bit-identical to the query side's Spark-text folds),
     and the corpus is written PARTITIONED BY bucket with the norm
     materialized, to ``{path}/buckets``. lsh_ann_topk recomputes the
     corpus signatures on EVERY query run — fine for one-shot, wasteful
@@ -349,18 +176,18 @@ def lsh_park(
     reference analog: MapFile's precomputed index, io/MapFile.java:49)
     where the online probe is a partition-pruned read of the query's
     bucket directory."""
-    signs = hyperplane_signs(nbits, seed=seed)
+    signs = folds.hyperplane_signs(nbits, seed=seed)
     (
         emb.select(
             F.col(id_col),
             F.col(vec_col),
-            project_udf(signs)(F.col(vec_col)).alias("_p"),
+            folds.project_udf(signs)(F.col(vec_col)).alias("_p"),
         )
         .select(
             F.col(id_col),
             F.col(vec_col),
             F.col("_p.nrm").alias("nrm"),
-            bucket_from_sums("_p.sums", 0, nbits).alias("bucket"),
+            folds.bucket_from_sums("_p.sums", 0, nbits).alias("bucket"),
         )
         # cluster rows by bucket before the partitioned write: without it
         # every task writes a sliver into every bucket directory (tasks x
@@ -384,8 +211,8 @@ def lsh_topk_scan(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH ANN top-k against a PARKED signature layout (lsh_park's
-    artifact): queries compute their bucket in-plan (bucket_expr over
-    the same deterministic hyperplane_signs, so a parked corpus member
+    artifact): queries compute their bucket in-plan (the same
+    deterministic hyperplane family and folds, so a parked corpus member
     lands in exactly its parked bucket) and broadcast; the join on the
     ``bucket`` partition column lets dynamic partition pruning skip
     every unprobed bucket directory, and the parked norm is read, not
@@ -393,11 +220,8 @@ def lsh_topk_scan(
     per query), never the corpus — and unlike lsh_ann_topk, ZERO
     signature compute on the corpus side at query time."""
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), hyperplane_signs(nbits, seed=seed)).alias("qb"),
+        _query_side(
+            queries, id_col, vec_col, folds.hyperplane_signs(nbits, seed=seed)
         )
     )
     c = queries.sparkSession.read.parquet(f"{path}/buckets").select(
@@ -431,14 +255,14 @@ def ivf_topk(
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
+            F.expr(folds.norm_spark(folds.quote_ident(vec_col))).alias("qn"),
             F.col(cell_col).alias("qcell"),
         )
     )
     c = emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        NORM(F.col(vec_col)).alias("cn"),
+        folds.NORM(F.col(vec_col)).alias("cn"),
         F.col(cell_col).alias("ccell"),
     )
     scored = q.join(
@@ -451,52 +275,11 @@ def ivf_topk(
     return _topk(scored, k)
 
 
-def l2_chain(a: Column, b: Column) -> Column:
-    """Engine-portable squared-L2 distance: left-fold double chain
-    0.0 + (a1-b1)^2 + (a2-b2)^2 + ... (same determinism contract as
-    dedup.dot_chain — the oracle emits the identical chain, IEEE doubles
-    don't reassociate, so the bits match)."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_chain_text(a: str, b: str) -> str:
-    """Spark-SQL text twin of :func:`l2_chain` — parses to the IDENTICAL
-    expression (same zip_with/aggregate, same cast chain, same 0.0 seed)
-    in ONE F.expr call. Rationale (r14): every higher-order Column call
-    (zip_with, aggregate, transform) costs ~40 py4j round-trips ≈ 60 ms
-    on this box, and builders that loop over centroids/subspaces pay it
-    k times — the unrolled IVF probe built 2 HOFs per centroid.
-    ``a``/``b`` are SQL fragments (column names or array literal text)."""
-    d = "(cast(x as double) - cast(y as double))"
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> {d} * {d}), 0.0D, "
-        "(acc, v) -> acc + v)"
-    )
-
-
-def sql_l2_chain(a: str, b: str, dims: int) -> str:
-    """DuckDB twin of l2_chain (same fold order, same 0.0 seed)."""
-    return "0.0 + " + " + ".join(
-        f"(CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
-        f" * (CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
-        for i in range(1, dims + 1)
-    )
-
-
 def kmeans_assign_udf(cvals: list[list[float]], cids: list[int] | None = None):
     """Pandas UDF: nearest-centroid id for each vector — the fast twin of
-    the crossJoin + l2_chain + min(struct) assignment. Distances
+    the crossJoin + folds.l2_spark + min(struct) assignment. Distances
     accumulate dimension-by-dimension ((x_d - c_d)^2 left fold, same IEEE
-    order as l2_chain); np.argmin returns the FIRST minimum, which with
+    order as folds.l2_spark); np.argmin returns the FIRST minimum, which with
     centroids ordered by cid ascending is exactly the (dist, cid)
     tie-break. ``cids`` maps argmin positions back to cluster ids when
     some clusters are empty (positions != ids)."""
@@ -518,27 +301,6 @@ def kmeans_assign_udf(cvals: list[list[float]], cids: list[int] | None = None):
     return _assign
 
 
-def quote_ident(name: str) -> str:
-    """Backtick-quote (and escape) a column name for SQL-text builders —
-    keeps parity with F.col semantics for names containing dots, spaces,
-    or backticks (round-14 ADVICE on the raw-fragment interpolations)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def lit_vec_text(vals: list[float]) -> str:
-    """SQL text of a double-vector literal (see lit_vec)."""
-    return "array(" + ", ".join(f"cast('{v!r}' as double)" for v in vals) + ")"
-
-
-def lit_vec(vals: list[float]) -> Column:
-    """A vector of double literals via string->double casts. repr() emits
-    the shortest round-trip decimal and CAST(varchar AS double) is
-    correctly rounded, so the plan constant is bit-equal to the source
-    value — the same contract the oracle relies on when it recomputes the
-    vector from the table instead of receiving the literal."""
-    return F.expr(lit_vec_text(vals))
-
-
 def farthest_first_seeds(
     emb: DataFrame,
     k: int,
@@ -552,7 +314,7 @@ def farthest_first_seeds(
     Seed 0 is the vector with the smallest (md5(id), id) — the same rule
     as the hash init. Seed i maximizes the min L2 distance to the chosen
     seeds, ties broken by (md5(id), id) ascending. Distances use the
-    fixed-order l2_chain fold, so an engine replaying the same rule (the
+    fixed-order folds.l2_spark fold, so an engine replaying the same rule (the
     cluster_kmeans_pp oracle) picks bit-identical seeds.
 
     Scale shape: k-1 rounds, each a corpus scan against k broadcast
@@ -568,8 +330,8 @@ def farthest_first_seeds(
     first = base.orderBy("_m", "_sid").limit(1).collect()[0]
     seeds: list[list[float]] = [[float(x) for x in first["_v"]]]
     for _ in range(1, k):
-        dists = [l2_chain(F.col("_v"), lit_vec(s)) for s in seeds]
-        dmin = F.least(*dists) if len(dists) > 1 else dists[0]
+        dists = [folds.l2_spark("_v", folds.lit_vec_text(s)) for s in seeds]
+        dmin = F.expr(f"least({', '.join(dists)})" if len(dists) > 1 else dists[0])
         row = (
             base.select("_m", "_sid", "_v", dmin.alias("_d"))
             .orderBy(F.desc("_d"), "_m", "_sid")
@@ -586,7 +348,7 @@ def kmeans_train_assign(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int = DIMS,
+    dims: int = folds.DIMS,
     use_arrow: bool = True,
     cache_points: bool = False,
     init: str = "hash",
@@ -603,7 +365,7 @@ def kmeans_train_assign(
     same algorithm in SQL):
     - seeds: the k vectors with smallest (md5(id), id) — data-derived,
       no RNG state;
-    - assignment: argmin of the fixed-order l2_chain distance, ties by
+    - assignment: argmin of the fixed-order folds.l2_spark distance, ties by
       centroid id (row_number over (dist, cid));
     - update: per-component mean as CAST(decimal(18,6)-exact sum AS
       DOUBLE) / CAST(count AS DOUBLE) — order-independent sums, one
@@ -686,7 +448,7 @@ def kmeans_train_assign(
             F.col(id_col),
             F.col(vec_col),
             F.col("cid"),
-            l2_chain(F.col(vec_col), F.col("cvec")).alias("_d"),
+            F.expr(folds.l2_spark(folds.quote_ident(vec_col), "cvec")).alias("_d"),
         )
         return (
             scored.groupBy(id_col)
@@ -873,7 +635,7 @@ def _exact_rerank(
     rerank=50 (the measured default; sim_pq_topk_scan_r50 prices it);
     the cost is linear in |queries| x rerank float-row reads, which
     stays negligible next to the code scan at any corpus size."""
-    nrm = _norm(F.col(vec_col))
+    nrm = F.expr(folds.norm_spark(folds.quote_ident(vec_col)))
     qside = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), nrm.alias("qn")
     )
@@ -887,8 +649,7 @@ def _exact_rerank(
             "query_id",
             "neighbor_id",
             F.round(
-                dot_chain(F.col("qv"), F.col("cv"), DIMS)
-                / (F.col("qn") * F.col("cn")),
+                F.expr(folds.dot_spark("qv", "cv")) / (F.col("qn") * F.col("cn")),
                 9,
             ).alias("cosine"),
         )
@@ -960,7 +721,7 @@ def quantized_topk(
     return _exact_rerank(short, corpus, queries, k, id_col, vec_col)
 
 
-def bq_code(vec_col: str, dims: int = DIMS) -> Column:
+def bq_code(vec_col: str, dims: int = folds.DIMS) -> Column:
     """1-bit-per-dim sign quantization packed into ONE signed 64-bit code
     (dims <= 64): bit d is set iff vec[d] > 0 — the binary-quantization
     compression modern vector stores ship as their cheapest tier (32x
@@ -979,7 +740,7 @@ def bq_code(vec_col: str, dims: int = DIMS) -> Column:
     left-associated — codes bit-identical (test_bq_code_bit_pattern)."""
     if dims > 64:
         raise ValueError("bq_code packs at most 64 dims into one long")
-    v = quote_ident(vec_col)
+    v = folds.quote_ident(vec_col)
     terms = " + ".join(
         f"if({v}[{d}] > 0,"
         f" cast({(1 << d) if d < 63 else -(1 << 63)} as bigint),"
@@ -996,7 +757,7 @@ def bq_topk(
     rerank: int = 20,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int = DIMS,
+    dims: int = folds.DIMS,
 ) -> DataFrame:
     """Binary-quantization ANN: sign-pack every vector into one long
     (bq_code), score all candidates by Hamming distance
@@ -1059,24 +820,17 @@ def negative_mine_topk(
     shape as the brute-force baseline, with the top-k window per query.
     At larger query sets, swap to the multi-probe form: equi-join on
     each of the query's non-own buckets."""
-    signs = hyperplane_signs(nbits, seed=seed)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), signs).alias("qb"),
-        )
-    )
+    signs = folds.hyperplane_signs(nbits, seed=seed)
+    q = F.broadcast(_query_side(queries, id_col, vec_col, signs))
     c = emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        project_udf(signs)(F.col(vec_col)).alias("_p"),
+        folds.project_udf(signs)(F.col(vec_col)).alias("_p"),
     ).select(
         "neighbor_id",
         "cv",
         F.col("_p.nrm").alias("cn"),
-        bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
+        folds.bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
     )
     scored = q.join(
         c, (q["qb"] != c["cb"]) & (q["query_id"] != c["neighbor_id"])
@@ -1126,16 +880,16 @@ def knn_graph(
     is a WindowGroupLimit-pruned rank, never a global sort."""
     from hadoop_1_spark.operators.caching import persist_tracked
 
-    signs = hyperplane_signs(nbits, seed=seed)
+    signs = folds.hyperplane_signs(nbits, seed=seed)
     base = persist_tracked(
         emb.select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_v"),
-            project_udf(signs)(F.col(vec_col)).alias("_p"),
+            folds.project_udf(signs)(F.col(vec_col)).alias("_p"),
         ).select(
             "_id", "_v",
             F.col("_p.nrm").alias("_n"),
-            bucket_from_sums("_p.sums", 0, nbits).alias("_b"),
+            folds.bucket_from_sums("_p.sums", 0, nbits).alias("_b"),
         )
     )
     return _knn_cell_topk(base, k, row_block, col_block)
@@ -1150,7 +904,7 @@ def _knn_cell_topk(
     occupancy-scaled variants.
 
     Cellwise pair scoring (r8): the bucket self-join's per-pair Arrow
-    DOT_FOLD shipped BOTH vectors per candidate pair — O(pairs * dims)
+    folds.DOT_FOLD shipped BOTH vectors per candidate pair — O(pairs * dims)
     transfer, 135 s / 76.7x at the sf1 probe. One applyInPandas pass
     per bucket instead: vectors cross Arrow once per ROW, in-cell dots
     are per-DIMENSION outer-product accumulation (DOT_FOLD's exact flop
@@ -1243,49 +997,6 @@ def _knn_cell_topk(
     return _topk(scored, k)
 
 
-def auto_nbits_expr(
-    count_col: Column, target_occupancy: int, min_nbits: int, max_nbits: int
-) -> Column:
-    """Occupancy-scaled LSH width: the smallest ``b`` in
-    [min_nbits, max_nbits] with 2^b * target_occupancy >= n — i.e.
-    ceil(log2(n / target)) in EXACT integer arithmetic (a CASE chain of
-    integer comparisons; no floating log whose last-ulp behavior could
-    differ between engines at exact powers of two). Mean bucket
-    occupancy stays <= target, so the in-bucket pair work sum(|b|^2)
-    stays ~n * target — LINEAR in the corpus, where a fixed nbits gives
-    n^2 / 2^nbits (the round-12 sim_knn_graph gate row: 16 fixed
-    buckets, sum(|b|^2) grew exactly 100x on 10x data)."""
-    expr = F.when(
-        F.lit((1 << min_nbits) * target_occupancy) >= count_col, F.lit(min_nbits)
-    )
-    for b in range(min_nbits + 1, max_nbits):
-        expr = expr.when(
-            F.lit((1 << b) * target_occupancy) >= count_col, F.lit(b)
-        )
-    return expr.otherwise(F.lit(max_nbits)).cast("int")
-
-
-def bucket_from_sums_dyn(
-    sums_sql: str, offset: int, max_bits: int, nbits_sql: str
-) -> Column:
-    """bucket_from_sums with a RUNTIME bit count: bit i contributes only
-    when i < nbits_col (the broadcast occupancy-derived width). The
-    first ``nbits`` hyperplanes of a max_bits family are byte-identical
-    to a standalone nbits family (hyperplane_signs derives row i from
-    seed:i:d independently), so a dynamic width never changes which
-    planes the bits come from.
-
-    r15: sums/nbits arrive as SQL text and the whole conditional bit sum
-    is ONE parsed expression (see bucket_from_sums) — bit-identical, ~8
-    py4j round-trips per bit removed from every dynamic-width builder."""
-    text = " + ".join(
-        f"if(({i} < {nbits_sql})"
-        f" and (element_at({sums_sql}, {offset + i + 1}) > 0), {1 << i}, 0)"
-        for i in range(max_bits)
-    )
-    return F.expr(f"cast(({text}) as int)")
-
-
 def knn_graph_auto(
     emb: DataFrame,
     k: int = 3,
@@ -1312,7 +1023,7 @@ def knn_graph_auto(
     into both the bucket projection — no driver collect), the
     hyperplane sums are computed once for max_nbits planes in the same
     single Arrow pass, and the bucket takes the first nbits bits
-    (identical planes to a fixed-nbits family, see bucket_from_sums_dyn),
+    (identical planes to a fixed-nbits family, see folds.bucket_from_sums),
     so on any corpus where the derived width equals ``nbits`` the
     result is BIT-IDENTICAL to knn_graph (at the defaults: every corpus
     with n <= 2^4 * 128 = 2048, which includes the sf0.01 oracle
@@ -1324,23 +1035,23 @@ def knn_graph_auto(
     the width derivation and the dynamic bucket bit-for-bit."""
     from hadoop_1_spark.operators.caching import persist_tracked
 
-    signs = hyperplane_signs(max_nbits, seed=seed)
+    signs = folds.hyperplane_signs(max_nbits, seed=seed)
+    nbits = folds.occupancy_nbits("_cnt", target_occupancy, min_nbits, max_nbits)
     nrel = emb.agg(F.count(F.lit(1)).alias("_cnt")).select(
-        auto_nbits_expr(F.col("_cnt"), target_occupancy, min_nbits, max_nbits)
-        .alias("_nbits")
+        F.expr(f"cast({nbits} as int)").alias("_nbits")
     )
     base = persist_tracked(
         emb.crossJoin(F.broadcast(nrel))
         .select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_v"),
-            project_udf(signs)(F.col(vec_col)).alias("_p"),
+            folds.project_udf(signs)(F.col(vec_col)).alias("_p"),
             "_nbits",
         )
         .select(
             "_id", "_v",
             F.col("_p.nrm").alias("_n"),
-            bucket_from_sums_dyn("_p.sums", 0, max_nbits, "_nbits").alias("_b"),
+            folds.bucket_from_sums("_p.sums", 0, max_nbits, "_nbits").alias("_b"),
         )
     )
     return _knn_cell_topk(base, k, row_block, col_block)
@@ -1376,23 +1087,16 @@ def mmr_topk(
     never corpus-sized. Queries are broadcast throughout."""
     from hadoop_1_spark.operators.caching import local_checkpoint, persist_tracked
 
-    signs = hyperplane_signs(nbits, seed=seed)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-            bucket_expr(F.col(vec_col), signs).alias("qb"),
-        )
-    )
+    signs = folds.hyperplane_signs(nbits, seed=seed)
+    q = F.broadcast(_query_side(queries, id_col, vec_col, signs))
     c = emb.select(
         F.col(id_col).alias("cid"),
         F.col(vec_col).alias("cv"),
-        project_udf(signs)(F.col(vec_col)).alias("_p"),
+        folds.project_udf(signs)(F.col(vec_col)).alias("_p"),
     ).select(
         "cid", "cv",
         F.col("_p.nrm").alias("cn"),
-        bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
+        folds.bucket_from_sums("_p.sums", 0, nbits).alias("cb"),
     )
     cand = persist_tracked(
         q.join(c, (q["qb"] == c["cb"]) & (q["query_id"] != c["cid"])).select(
@@ -1583,8 +1287,8 @@ def normalize_embeddings(
     standard recipe). Unit-norm inputs are what cosine ANN assumes —
     dot product == cosine, so the downstream index skips per-row norms.
 
-    Determinism: the norm uses the repo's fixed-order dot-chain fold
-    (dedup.dot_chain — same float op order in Spark and the oracle);
+    Determinism: the norm uses the repo's fixed-order dot fold
+    (folds.norm_spark — same float op order in Spark and the oracle);
     each normalized coordinate ships as the q9 integer
     floor(x/nrm * 10^9 + 0.5) — floor(x+0.5) rounds half toward +inf
     for both signs, the quantize_embeddings rule — so the csv is pure
@@ -1598,15 +1302,11 @@ def normalize_embeddings(
 
     Shape: one narrow projection inside whole-stage codegen — no
     shuffle, scales as a pure map at any corpus size."""
-    from hadoop_1_spark.operators.dedup import dot_chain
-
     d = F.col(vec_col)
     if dims is not None:
         d = F.slice(F.col(vec_col), 1, dims)
-    trunc = F.expr("_t")
-    # dot_chain's dims arg only parameterizes its SQL twin; the fold is
-    # length-agnostic, so no per-dims branch is needed here
-    nrm = F.sqrt(dot_chain(trunc, trunc))
+    # the fold is length-agnostic, so no per-dims branch is needed here
+    nrm = F.expr(folds.norm_spark("_t"))
     code = lambda x: F.floor(  # noqa: E731
         x.cast("double") / F.col("_n") * 1000000000.0 + 0.5
     ).cast("bigint")
@@ -1749,7 +1449,7 @@ def pq_adc_topk(
     O(m) adds per candidate against a |queries| x m x k LUT.
 
     Determinism: LUT distances are the fixed-order l2 fold (the oracle
-    replays sql_l2_chain on the SQL-recomputed codebooks — identical
+    replays folds.l2_duck on the SQL-recomputed codebooks — identical
     doubles); the ADC sum is the left-associated d0 + d1 + d2 + d3 in
     both engines; shortlist ties break (adist ASC, neighbor ASC).
 
@@ -1831,7 +1531,7 @@ def _pq_adc_scan(
     # m MAP COLUMNS on ONE broadcast relation — one row per query (or per
     # (query, probed cell) in the by_residual layout), entry j of map i is
     # the fixed-order l2 fold of the query's subspace-i slice against
-    # codebook i's centroid j as a PARSED LITERAL (lit_vec_text's
+    # codebook i's centroid j as a PARSED LITERAL (folds.lit_vec_text's
     # round-trip contract: cast('repr' as double) is bit-equal to the
     # source double, so each map value is bit-identical to the _d{i} the
     # r14 form computed from a createDataFrame centroid column). The r14
@@ -1845,7 +1545,7 @@ def _pq_adc_scan(
         cvals, cids = books[i]
         sl = f"slice({src}, {i * subdim + 1}, {subdim})"
         entries = ", ".join(
-            f"{int(c)}, ({l2_chain_text(sl, lit_vec_text(list(v)))})"
+            f"{int(c)}, ({folds.l2_spark(sl, folds.lit_vec_text(list(v)))})"
             for c, v in zip(cids, cvals)
         )
         return F.expr(f"map({entries})").alias(f"_m{i}")
@@ -2235,11 +1935,11 @@ def ivf_probe_cells(
     candidates never need a dedup.
 
     r14: the whole ranked-probe expression is ONE F.expr parse — the
-    per-centroid l2_chain/struct Column loop paid ~2 higher-order-call
-    round-trip sets per centroid at plan-build time (see l2_chain_text);
-    the parsed expression is identical."""
+    per-centroid Column-built l2/struct loop paid ~2 higher-order-call
+    round-trip sets per centroid at plan-build time; the parsed
+    expression is identical."""
     structs = ", ".join(
-        f"named_struct('d', {l2_chain_text(quote_ident(vec_col), lit_vec_text(v))},"
+        f"named_struct('d', {folds.l2_spark(folds.quote_ident(vec_col), folds.lit_vec_text(v))},"
         f" 'cid', {int(cid)})"
         for cid, v in cents
     )
@@ -2265,7 +1965,7 @@ def ivf_probe_cells_join(
     constants into the plan (right for a fixture-sized k; expression
     count blows past whole-stage codegen limits at a few hundred cells),
     while this crossJoins the broadcast k-row centroid relation and ranks
-    by the same (fixed-order l2_chain, cid) order — the exact assignment
+    by the same (fixed-order folds.l2_spark, cid) order — the exact assignment
     shape kmeans training itself uses (assign()'s min(struct)), so
     nprobe=1 still reproduces the trained cell for corpus members and
     the kmeans oracle CTEs replay any nprobe with a row_number. The
@@ -2277,7 +1977,7 @@ def ivf_probe_cells_join(
         .select(
             "query_id",
             F.col("cid"),
-            l2_chain(F.col(vec_col), F.col("cvec")).alias("_d"),
+            F.expr(folds.l2_spark(folds.quote_ident(vec_col), "cvec")).alias("_d"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("cid"))
@@ -2301,10 +2001,10 @@ def ivf_topk_scan(
     centroid model (bounded driver read — k_cells rows, the IVF
     equivalent of pq_adc_topk_scan's codebook collect), assign each query
     to its nearest centroid IN-PLAN with the same argmin rule training
-    used (fixed-order l2_chain against lit_vec bit-equal constants, ties
-    by cid — so a corpus-member query lands in exactly its trained cell,
-    and the kmeans oracle CTEs replay the assignment), and score only the
-    matching cells.
+    used (fixed-order folds.l2_spark against bit-equal lit_vec_text
+    constants, ties by cid — so a corpus-member query lands in exactly
+    its trained cell, and the kmeans oracle CTEs replay the assignment),
+    and score only the matching cells.
 
     Shape at 100 TB: queries broadcast; the cells relation is partitioned
     by cell, so the broadcast join on the partition column lets dynamic
@@ -2340,13 +2040,13 @@ def ivf_topk_scan(
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
+            F.expr(folds.norm_spark(folds.quote_ident(vec_col))).alias("qn"),
         ).join(cells, "query_id")
     )
     c = spark.read.parquet(f"{path}/cells").select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        NORM(F.col(vec_col)).alias("cn"),
+        folds.NORM(F.col(vec_col)).alias("cn"),
         F.col("cell").cast("int").alias("ccell"),
     )
     scored = q.join(
@@ -2359,7 +2059,7 @@ def ivf_topk_scan(
     return _topk(scored, k)
 
 
-def bq_ivf_park(spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding", dims: int = DIMS) -> None:
+def bq_ivf_park(spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding", dims: int = folds.DIMS) -> None:
     """Derive the binary tier of a PARKED IVF index (round-11, the rung
     bq_topk's docstring promises): read ``{path}/cells`` (ivf_park's
     cell-partitioned corpus), sign-pack each vector into one long
@@ -2392,7 +2092,7 @@ def bq_ivf_topk_scan(
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int = DIMS,
+    dims: int = folds.DIMS,
     probe: str = "unrolled",
 ) -> DataFrame:
     """Partition-pruned binary-quantization ANN against a parked IVF

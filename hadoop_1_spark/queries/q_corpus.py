@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import corpusprep, dedup, sampling, textops
+from hadoop_1_spark.operators import corpusprep, dedup, folds, sampling, textops
 from hadoop_1_spark.registry import ORACLE, _load, register
 
 MIN_QUALITY = 0.5
@@ -265,23 +265,19 @@ def corpus_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_decon_oracle(bands: int = 4, min_bits: int = 4,
                            max_bits: int = 8, target: int = 128,
                            threshold: float = 0.45) -> str:
-    from hadoop_1_spark.operators import dedup as dedup_ops
-    from hadoop_1_spark.operators import similarity
-    from hadoop_1_spark.queries.q_similarity import (
-        _auto_nbits_sql,
-        _bucket_sql_dyn,
-    )
-
     bucket_cols = ",\n       ".join(
-        f"{_bucket_sql_dyn('embedding', similarity.hyperplane_signs(max_bits, seed=100 + b), 'nb.nbits')} AS b{b}"
+        f"{folds.bucket_duck('embedding', folds.hyperplane_signs(max_bits, seed=100 + b), 'nb.nbits')} AS b{b}"
         for b in range(bands)
     )
     band_list = ", ".join(f"'{b}' || ':' || b{b}::VARCHAR" for b in range(bands))
     return f"""
-WITH nb AS ({_auto_nbits_sql(target, min_bits, max_bits)}),
+WITH nb AS (
+  SELECT {folds.occupancy_nbits("n", target, min_bits, max_bits)} AS nbits
+  FROM (SELECT count(*) AS n FROM embeddings)
+),
 e AS (
   SELECT vec_id, embedding,
-       sqrt({dedup_ops.sql_dot_chain("embedding", "embedding", 64)}) AS nrm,
+       {folds.norm_duck("embedding")} AS nrm,
        {bucket_cols}
   FROM embeddings, nb
 ),
@@ -293,7 +289,7 @@ cand AS (
 ),
 c AS (
   SELECT d1, d2,
-         round(({dedup_ops.sql_dot_chain("e1.embedding", "e2.embedding", 64)}) / (e1.nrm * e2.nrm), 9) AS cosine
+         round(({folds.dot_duck("e1.embedding", "e2.embedding")}) / (e1.nrm * e2.nrm), 9) AS cosine
   FROM cand JOIN e e1 ON d1 = e1.vec_id JOIN e e2 ON d2 = e2.vec_id
 )
 SELECT d1 AS vec_id, d2 AS bench_id, cosine FROM c WHERE cosine >= {threshold}

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import dedup, dedup_autocap, linkage, textops
+from hadoop_1_spark.operators import dedup, dedup_autocap, folds, linkage, textops
 from hadoop_1_spark.registry import _load, register
 
 _TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
@@ -336,7 +336,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COSINE_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, embedding,
-         sqrt({dedup.sql_dot_chain("embedding", "embedding", 64)}) AS nrm
+         {folds.norm_duck("embedding")} AS nrm
   FROM embeddings
 ),
 p AS (
@@ -345,7 +345,7 @@ p AS (
   FROM e a JOIN e b ON a.vec_id < b.vec_id
 ),
 c AS (
-  SELECT d1, d2, round(({dedup.sql_dot_chain("v1", "v2", 64)}) / (n1 * n2), 9) AS cosine
+  SELECT d1, d2, round(({folds.dot_duck("v1", "v2", 64)}) / (n1 * n2), 9) AS cosine
   FROM p
 )
 SELECT d1, d2, cosine FROM c WHERE cosine >= 0.45
@@ -354,24 +354,23 @@ SELECT d1, d2, cosine FROM c WHERE cosine >= 0.45
 
 @register("dedup_embedding_cosine", oracle=_COSINE_ORACLE)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs at threshold 0.45 (decimal-exact
-    sums -> deterministic doubles; see dedup.cosine_expr)."""
+    """Embedding-cosine near-dup pairs at threshold 0.45: per-vector norms
+    and pair dots are the fixed-order double folds (folds.NORM /
+    folds.DOT_FOLD; the oracle replays folds.norm_duck / folds.dot_duck),
+    rounded to 9 places."""
     return dedup.embedding_cosine_pairs(_load(spark, sf_dir, "embeddings"), threshold=0.45)
 
 
 def _embedding_lsh_oracle(bands: int = 4, bits: int = 4) -> str:
-    from hadoop_1_spark.operators import similarity
-    from hadoop_1_spark.queries.q_similarity import _bucket_sql
-
     bucket_cols = ",\n       ".join(
-        f"{_bucket_sql('embedding', similarity.hyperplane_signs(bits, seed=100 + b))} AS b{b}"
+        f"{folds.bucket_duck('embedding', folds.hyperplane_signs(bits, seed=100 + b))} AS b{b}"
         for b in range(bands)
     )
     band_list = ", ".join(f"'{b}' || ':' || b{b}::VARCHAR" for b in range(bands))
     return f"""
 WITH e AS (
   SELECT vec_id, embedding,
-       sqrt({dedup.sql_dot_chain("embedding", "embedding", 64)}) AS nrm,
+       {folds.norm_duck("embedding")} AS nrm,
        {bucket_cols}
   FROM embeddings
 ),
@@ -382,7 +381,7 @@ cand AS (
 ),
 c AS (
   SELECT d1, d2,
-         round(({dedup.sql_dot_chain("e1.embedding", "e2.embedding", 64)}) / (e1.nrm * e2.nrm), 9) AS cosine
+         round(({folds.dot_duck("e1.embedding", "e2.embedding", 64)}) / (e1.nrm * e2.nrm), 9) AS cosine
   FROM cand JOIN e e1 ON d1 = e1.vec_id JOIN e e2 ON d2 = e2.vec_id
 )
 SELECT d1, d2, cosine FROM c WHERE cosine >= 0.45

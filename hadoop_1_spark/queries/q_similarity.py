@@ -3,9 +3,9 @@ top-k, random-hyperplane LSH ANN, IVF-style cell probe — over the
 embeddings table, query set = vec_id < 10, k = 5.
 
 The oracle replicates each pipeline exactly: the same hyperplane sign
-constants (generated once in similarity.hyperplane_signs) and the same
-fixed-order floating-point chains, so ANN candidate sets — not just final
-scores — must agree.
+constants (generated once in folds.hyperplane_signs) and the same
+fixed-order floating-point chains (the DuckDB twins in operators/folds.py),
+so ANN candidate sets — not just final scores — must agree.
 """
 
 from __future__ import annotations
@@ -13,21 +13,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import similarity
+from hadoop_1_spark.operators import folds, similarity
 from hadoop_1_spark.registry import _load, register
 
 K = 5
 NBITS = 4
 
-from hadoop_1_spark.operators.dedup import sql_dot_chain
-
-# Engine-portable cosine: the SAME fixed-order double chain the Spark side
-# emits (dedup.dot_chain) with per-vector precomputed norms; rounds to 9.
-_NRM = f"sqrt({sql_dot_chain('embedding', 'embedding', 64)})"
+# Engine-portable cosine: the SAME fixed-order double fold the Spark side
+# runs (folds.dot_duck) with per-vector precomputed norms; rounds to 9.
+_NRM = folds.norm_duck("embedding")
 _COSINE_CTES = f"""
 sc AS (
   SELECT query_id, neighbor_id,
-         round(({sql_dot_chain("qv", "cv", 64)}) / (qn * cn), 9) AS cosine
+         round(({folds.dot_duck("qv", "cv", 64)}) / (qn * cn), 9) AS cosine
   FROM p
 ),
 r AS (
@@ -38,18 +36,6 @@ r AS (
 """
 
 _FINAL = f"SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rank FROM r WHERE rn <= {K}"
-
-
-def _bucket_sql(vec: str, signs: list[list[int]]) -> str:
-    """SQL twin of similarity.bucket_expr: the same 0.0-seeded
-    left-associated signed-sum fold per hyperplane."""
-    parts = []
-    for i, row in enumerate(signs):
-        chain = "0.0 + " + " + ".join(
-            f"CAST({vec}[{d + 1}] AS DOUBLE) * ({float(row[d])})" for d in range(len(row))
-        )
-        parts.append(f"(CASE WHEN ({chain}) > 0 THEN {1 << i} ELSE 0 END)")
-    return " + ".join(parts)
 
 
 # Full exact-top-k statement — reused verbatim as the ground-truth CTE of
@@ -71,14 +57,14 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_oracle() -> str:
-    signs = similarity.hyperplane_signs(NBITS)
+    signs = folds.hyperplane_signs(NBITS)
     return f"""
 WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qv, {_NRM} AS qn, {_bucket_sql("embedding", signs)} AS qb
+  SELECT vec_id AS query_id, embedding AS qv, {_NRM} AS qn, {folds.bucket_duck("embedding", signs)} AS qb
   FROM embeddings WHERE vec_id < 10
 ),
 c AS (
-  SELECT vec_id AS neighbor_id, embedding AS cv, {_NRM} AS cn, {_bucket_sql("embedding", signs)} AS cb
+  SELECT vec_id AS neighbor_id, embedding AS cv, {_NRM} AS cn, {folds.bucket_duck("embedding", signs)} AS cb
   FROM embeddings
 ),
 p AS (SELECT query_id, neighbor_id, qv, cv, qn, cn FROM q JOIN c ON qb = cb AND query_id <> neighbor_id),
@@ -184,7 +170,7 @@ def _kmeanspp_seed_ctes(k: int, dims: int) -> list[str]:
     smallest (md5(id), id) vector; seed i maximizes the min fixed-order
     L2 distance to the chosen seeds, ties by (md5(id), id). Ends in
     ``seeds(cid, cvec)`` with cid = selection order."""
-    dist = similarity.sql_l2_chain("e.embedding", "s.cvec", dims)
+    dist = folds.l2_duck("e.embedding", "s.cvec", dims)
     ctes = [
         """seeds1 AS (
   SELECT 0 AS cid, embedding AS cvec FROM e
@@ -234,7 +220,7 @@ def _kmeans_ctes(
     isqrt(n) — interpolated into the seeds CTE's LIMIT (hash init only:
     kmeanspp unrolls one CTE per seed, so its k must be an int). The
     assignment/update CTEs are k-independent, so nothing else changes."""
-    dist = similarity.sql_l2_chain("e.embedding", "s.cvec", dims)
+    dist = folds.l2_duck("e.embedding", "s.cvec", dims)
     mean_list = ", ".join(
         f"CAST(sum(CAST(CAST(embedding[{d}] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)"
         f" / CAST(count(*) AS DOUBLE)"
@@ -334,7 +320,7 @@ def cluster_kmeans_pp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_dedup_oracle(
     threshold: float = 0.45, dims: int = 64, k: int | str | None = None
 ) -> str:
-    nrm = f"sqrt({sql_dot_chain('embedding', 'embedding', dims)})"
+    nrm = folds.norm_duck("embedding", dims)
     return (
         "WITH " + ",\n".join(_kmeans_ctes() if k is None else _kmeans_ctes(k=k))
         + f""",
@@ -345,7 +331,7 @@ p AS (
   FROM e2 a JOIN e2 b ON a.cid = b.cid AND a.vec_id < b.vec_id
 ),
 c AS (
-  SELECT d1, d2, round(({sql_dot_chain("v1", "v2", dims)}) / (n1 * n2), 9) AS cosine
+  SELECT d1, d2, round(({folds.dot_duck("v1", "v2", dims)}) / (n1 * n2), 9) AS cosine
   FROM p
 )
 SELECT d1, d2, cosine FROM c WHERE cosine >= {threshold}"""
@@ -546,14 +532,14 @@ def sim_ivf_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _negatives_oracle() -> str:
-    signs = similarity.hyperplane_signs(NBITS)
+    signs = folds.hyperplane_signs(NBITS)
     return f"""
 WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qv, {_NRM} AS qn, {_bucket_sql("embedding", signs)} AS qb
+  SELECT vec_id AS query_id, embedding AS qv, {_NRM} AS qn, {folds.bucket_duck("embedding", signs)} AS qb
   FROM embeddings WHERE vec_id < 10
 ),
 c AS (
-  SELECT vec_id AS neighbor_id, embedding AS cv, {_NRM} AS cn, {_bucket_sql("embedding", signs)} AS cb
+  SELECT vec_id AS neighbor_id, embedding AS cv, {_NRM} AS cn, {folds.bucket_duck("embedding", signs)} AS cb
   FROM embeddings
 ),
 p AS (
@@ -562,7 +548,7 @@ p AS (
 ),
 sc AS (
   SELECT query_id, neighbor_id, neg_bucket,
-         round(({sql_dot_chain("qv", "cv", 64)}) / (qn * cn), 9) AS cosine
+         round(({folds.dot_duck("qv", "cv", 64)}) / (qn * cn), 9) AS cosine
   FROM p
 ),
 r AS (
@@ -590,11 +576,11 @@ KNN_K = 3
 
 
 def _knn_oracle() -> str:
-    signs = similarity.hyperplane_signs(NBITS)
+    signs = folds.hyperplane_signs(NBITS)
     return f"""
 WITH v AS (
   SELECT vec_id, embedding AS ev, {_NRM} AS nrm,
-         {_bucket_sql("embedding", signs)} AS bkt
+         {folds.bucket_duck("embedding", signs)} AS bkt
   FROM embeddings
 ),
 p AS (
@@ -613,42 +599,16 @@ KNN_MIN_NBITS = 4
 KNN_MAX_NBITS = 10
 
 
-def _auto_nbits_sql(
-    target: int = KNN_TARGET_OCC,
-    min_nbits: int = KNN_MIN_NBITS,
-    max_nbits: int = KNN_MAX_NBITS,
-) -> str:
-    """SQL twin of similarity.auto_nbits_expr: the same integer CASE
-    chain (no floating log2 — exact at powers of two on both engines)."""
-    whens = " ".join(
-        f"WHEN {(1 << b) * target} >= n THEN {b}"
-        for b in range(min_nbits, max_nbits)
-    )
-    return (f"SELECT CASE {whens} ELSE {max_nbits} END AS nbits "
-            f"FROM (SELECT count(*) AS n FROM embeddings)")
-
-
-def _bucket_sql_dyn(vec: str, signs: list[list[int]], nbits_ref: str) -> str:
-    """SQL twin of similarity.bucket_from_sums_dyn: bit i contributes
-    only when i < the derived width."""
-    parts = []
-    for i, row in enumerate(signs):
-        chain = "0.0 + " + " + ".join(
-            f"CAST({vec}[{d + 1}] AS DOUBLE) * ({float(row[d])})" for d in range(len(row))
-        )
-        parts.append(
-            f"(CASE WHEN {i} < {nbits_ref} AND ({chain}) > 0 THEN {1 << i} ELSE 0 END)"
-        )
-    return " + ".join(parts)
-
-
 def _knn_auto_oracle() -> str:
-    signs = similarity.hyperplane_signs(KNN_MAX_NBITS)
+    signs = folds.hyperplane_signs(KNN_MAX_NBITS)
     return f"""
-WITH nb AS ({_auto_nbits_sql()}),
+WITH nb AS (
+  SELECT {folds.occupancy_nbits("n", KNN_TARGET_OCC, KNN_MIN_NBITS, KNN_MAX_NBITS)} AS nbits
+  FROM (SELECT count(*) AS n FROM embeddings)
+),
 v AS (
   SELECT vec_id, embedding AS ev, {_NRM} AS nrm,
-         {_bucket_sql_dyn("embedding", signs, "nb.nbits")} AS bkt
+         {folds.bucket_duck("embedding", signs, "nb.nbits")} AS bkt
   FROM embeddings, nb
 ),
 p AS (
@@ -698,22 +658,22 @@ MMR_K = 3
 
 
 def _mmr_oracle(k: int = MMR_K) -> str:
-    signs = similarity.hyperplane_signs(NBITS)
+    signs = folds.hyperplane_signs(NBITS)
     parts = [
         f"""WITH v AS (
   SELECT vec_id, embedding AS ev, {_NRM} AS nrm,
-         {_bucket_sql("embedding", signs)} AS bkt
+         {folds.bucket_duck("embedding", signs)} AS bkt
   FROM embeddings
 ),
 cand AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cid,
-         round(({sql_dot_chain("q.ev", "c.ev", 64)}) / (q.nrm * c.nrm), 9) AS rel
+         round(({folds.dot_duck("q.ev", "c.ev", 64)}) / (q.nrm * c.nrm), 9) AS rel
   FROM v q JOIN v c ON q.bkt = c.bkt AND q.vec_id <> c.vec_id
   WHERE q.vec_id < 10
 ),
 sims AS (
   SELECT p.query_id, p.cid AS c1, r.cid AS c2,
-         round(({sql_dot_chain("a.ev", "b.ev", 64)}) / (a.nrm * b.nrm), 9) AS s
+         round(({folds.dot_duck("a.ev", "b.ev", 64)}) / (a.nrm * b.nrm), 9) AS s
   FROM cand p JOIN cand r ON p.query_id = r.query_id AND p.cid <> r.cid
   JOIN v a ON p.cid = a.vec_id JOIN v b ON r.cid = b.vec_id
 ),
@@ -848,14 +808,14 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _filtered_oracle() -> str:
-    signs = similarity.hyperplane_signs(NBITS)
+    signs = folds.hyperplane_signs(NBITS)
     return f"""
 WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qv, {_NRM} AS qn, {_bucket_sql("embedding", signs)} AS qb
+  SELECT vec_id AS query_id, embedding AS qv, {_NRM} AS qn, {folds.bucket_duck("embedding", signs)} AS qb
   FROM embeddings WHERE vec_id < 10
 ),
 c AS (
-  SELECT vec_id AS neighbor_id, embedding AS cv, {_NRM} AS cn, {_bucket_sql("embedding", signs)} AS cb
+  SELECT vec_id AS neighbor_id, embedding AS cv, {_NRM} AS cn, {folds.bucket_duck("embedding", signs)} AS cb
   FROM embeddings JOIN documents d ON vec_id = d.doc_id AND d.lang = 'en'
 ),
 p AS (SELECT query_id, neighbor_id, qv, cv, qn, cn FROM q JOIN c ON qb = cb AND query_id <> neighbor_id),
@@ -888,7 +848,7 @@ MRL_DIMS = 32
     "embedding_normalize_mrl",
     oracle=f"""
 WITH t AS (SELECT vec_id, embedding[1:{MRL_DIMS}] AS tv FROM embeddings),
-n AS (SELECT vec_id, tv, sqrt({sql_dot_chain("tv", "tv", MRL_DIMS)}) AS nrm FROM t)
+n AS (SELECT vec_id, tv, {folds.norm_duck("tv", MRL_DIMS)} AS nrm FROM t)
 SELECT vec_id, round(nrm, 9) AS norm_q9,
        CASE WHEN nrm = 0
             THEN array_to_string(list_transform(tv, x -> 0), ',')
@@ -1001,7 +961,7 @@ def _pq_adc_oracle(rerank: int = PQ_RERANK) -> str:
     for m in range(PQ_M):
         lo, hi = m * PQ_SUBDIM + 1, (m + 1) * PQ_SUBDIM
         cb_table = f"(WITH {chains[m]}\n SELECT cid, cvec FROM c{PQ_ITERS - 1})"
-        dist = similarity.sql_l2_chain("q.qs", "cb.cvec", PQ_SUBDIM)
+        dist = folds.l2_duck("q.qs", "cb.cvec", PQ_SUBDIM)
         lut_ctes.append(
             f"""lut{m} AS (
   SELECT q.query_id, cb.cid AS c{m}, {dist} AS d
@@ -1210,7 +1170,7 @@ def _ivf_pq_oracle(k: int | str = KM_K) -> str:
     for m in range(PQ_M):
         lo, hi = m * PQ_SUBDIM + 1, (m + 1) * PQ_SUBDIM
         cb_table = f"(WITH {chains[m]}\n SELECT cid, cvec FROM c{PQ_ITERS - 1})"
-        dist = similarity.sql_l2_chain("q.qs", "cb.cvec", PQ_SUBDIM)
+        dist = folds.l2_duck("q.qs", "cb.cvec", PQ_SUBDIM)
         lut_ctes.append(
             f"""lut{m} AS (
   SELECT q.query_id, cb.cid AS c{m}, {dist} AS d
@@ -1342,7 +1302,7 @@ def _ivf_pq_residual_oracle() -> str:
     chains, code_tables = _pq_subspace_sql(source="rs", pre_sliced=True, flat=True)
     lut_ctes = []
     for m in range(PQ_M):
-        dist = similarity.sql_l2_chain("q.qs", "cb.cvec", PQ_SUBDIM)
+        dist = folds.l2_duck("q.qs", "cb.cvec", PQ_SUBDIM)
         lut_ctes.append(
             f"""lut{m} AS (
   SELECT q.query_id, q.cell, cb.cid AS c{m}, {dist} AS d
@@ -1454,7 +1414,7 @@ def _ivf_multiprobe_oracle() -> str:
     kmeans CTE chain supplies both the final centroids (c{iters-1}) and
     the corpus assignment (afinal), so widening the probe reuses the
     training replay verbatim."""
-    dist = similarity.sql_l2_chain("q0.embedding", "s.cvec", 64)
+    dist = folds.l2_duck("q0.embedding", "s.cvec", 64)
     return (
         "WITH " + ",\n".join(_kmeans_ctes())
         + f""",
@@ -1505,7 +1465,7 @@ def _bq_ivf_oracle() -> str:
     shortlist of _bq_oracle, then the shared exact-rerank tail — so
     neither the probe rule nor the binary discipline can diverge from
     their standalone oracles."""
-    dist = similarity.sql_l2_chain("q0.embedding", "s.cvec", 64)
+    dist = folds.l2_duck("q0.embedding", "s.cvec", 64)
     return (
         "WITH " + ",\n".join(_kmeans_ctes())
         + f""",

@@ -49,7 +49,7 @@ def main() -> None:
         "runtime plan.",
         "expected Python nodes: mm_features/pipe_* (Arrow seams), sim_*/",
         "dedup_embedding_* (Arrow vector math, bit-identical to the expression",
-        "folds — see similarity.py), gridmix_varkv_sort (SortValidator",
+        "folds — see operators/folds.py), gridmix_varkv_sort (SortValidator",
         "per-partition checks),",
         "secondary_sort_iterator (grouped iterator contract), terasort_validate",
         "(TeraValidate per-partition boundary checks), pentomino/pipe (RDD surface).",

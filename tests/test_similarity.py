@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_1_spark.operators import similarity
+from hadoop_1_spark.operators import folds, similarity
 from tests.conftest import SF_DIR, assert_query_matches_oracle
 
 
@@ -15,11 +15,11 @@ def test_similarity_queries_match_oracle(spark, duck, name):
 
 
 def test_hyperplane_signs_deterministic():
-    a = similarity.hyperplane_signs(4)
-    b = similarity.hyperplane_signs(4)
+    a = folds.hyperplane_signs(4)
+    b = folds.hyperplane_signs(4)
     assert a == b
     assert all(s in (-1, 1) for row in a for s in row)
-    assert similarity.hyperplane_signs(4, seed=7) != a
+    assert folds.hyperplane_signs(4, seed=7) != a
 
 
 def test_brute_force_topk_self_excluded_and_ranked(spark):
@@ -53,44 +53,87 @@ def test_lsh_recall_vs_brute_force(spark):
     assert hits >= 1
 
 
-def test_arrow_paths_bit_identical(spark):
-    """The Arrow fast twins (NORM / DOT_FOLD / project_udf) must be
-    BIT-identical to the expression-form reference folds (_norm /
-    dot_chain / signed_sums_fused): numpy applies += / * elementwise over
-    the batch dimension-by-dimension, so every output element sees the
-    exact left-fold IEEE-double operation order of the expression form."""
-    from pyspark.sql import functions as F
-
-    from hadoop_1_spark.operators.dedup import dot_chain
-    from hadoop_1_spark.session import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings").limit(200)
-    signs = similarity.hyperplane_signs(8)
-    pair = emb.alias("a").crossJoin(
-        emb.where("vec_id < 3").select(F.col("embedding").alias("e2")).alias("b")
-    )
-    rows = (
-        pair.select(
-            similarity._norm(F.col("embedding")).alias("n_expr"),
-            similarity.NORM(F.col("embedding")).alias("n_arrow"),
-            dot_chain(F.col("embedding"), F.col("e2"), similarity.DIMS).alias("d_expr"),
-            similarity.DOT_FOLD(F.col("embedding"), F.col("e2")).alias("d_arrow"),
-            similarity.signed_sums_fused(F.col("embedding"), signs).alias("s_expr"),
-            similarity.project_udf(signs)(F.col("embedding")).alias("p_arrow"),
-        )
-        .collect()
-    )
-    assert rows
+def test_arrow_paths_bit_identical(spark, duck):
+    """Every fold in operators/folds.py is BIT-identical across its
+    dialects on the same sf0.001 rows: the parsed Spark SQL text, the
+    DuckDB twin and the Arrow twin (numpy applies += / * elementwise over
+    the batch dimension by dimension, so every output element sees the
+    same left-fold IEEE-double operation order). Covers norm, dot,
+    squared L2, hyperplane signed sums, and bucket ids at a fixed width
+    and at a per-row runtime width. The vector column is also aliased
+    ``d`` and ``s``: a text-fold lambda variable of either name would
+    capture the column and fail analysis."""
     import struct
+
+    from hadoop_1_spark.session import load_table
 
     def bits(x):
         return struct.pack("<d", x)
 
-    for r in rows:
-        assert bits(r["n_expr"]) == bits(r["n_arrow"])
-        assert bits(r["n_expr"]) == bits(r["p_arrow"]["nrm"])
-        assert bits(r["d_expr"]) == bits(r["d_arrow"])
-        assert [bits(x) for x in r["s_expr"]] == [bits(x) for x in r["p_arrow"]["sums"]]
+    signs = folds.hyperplane_signs(8)
+    emb = load_table(spark, SF_DIR, "embeddings").where("vec_id < 200")
+    pair = emb.crossJoin(
+        emb.where("vec_id < 3").select(
+            F.col("vec_id").alias("e2_id"), F.col("embedding").alias("e2")
+        )
+    )
+    duck_rows = duck.execute(
+        f"""
+SELECT a.vec_id, b.vec_id AS e2_id,
+       {folds.norm_duck("a.embedding")} AS n,
+       {folds.dot_duck("a.embedding", "b.embedding")} AS d,
+       {folds.l2_duck("a.embedding", "b.embedding")} AS l2,
+       [{", ".join(folds.signed_sum_duck("a.embedding", row) for row in signs)}] AS s,
+       {folds.bucket_duck("a.embedding", signs)} AS b,
+       {folds.bucket_duck("a.embedding", signs, "(a.vec_id % 9)")} AS b_dyn
+FROM embeddings a CROSS JOIN embeddings b
+WHERE a.vec_id < 200 AND b.vec_id < 3
+"""
+    ).fetchall()
+    want = {(r[0], r[1]): r[2:] for r in duck_rows}
+    assert len(want) == 600
+
+    for vec in ("embedding", "d", "s"):
+        v = folds.quote_ident(vec)
+        rows = (
+            pair.select(
+                "vec_id",
+                "e2_id",
+                "e2",
+                F.col("embedding").alias(vec),
+                F.expr("cast(pmod(vec_id, 9) as int)").alias("nb"),
+            )
+            .select(
+                "vec_id",
+                "e2_id",
+                "nb",
+                F.expr(folds.norm_spark(v)).alias("n_text"),
+                folds.NORM(F.col(vec)).alias("n_arrow"),
+                F.expr(folds.dot_spark(v, "e2")).alias("d_text"),
+                folds.DOT_FOLD(F.col(vec), F.col("e2")).alias("d_arrow"),
+                F.expr(folds.l2_spark(v, "e2")).alias("l2_text"),
+                F.expr(folds.signed_sums_spark(v, signs)).alias("s_text"),
+                folds.project_udf(signs)(F.col(vec)).alias("p_arrow"),
+            )
+            .select(
+                "*",
+                folds.bucket_from_sums("s_text", 0, 8).alias("b_text"),
+                folds.bucket_from_sums("p_arrow.sums", 0, 8).alias("b_arrow"),
+                folds.bucket_from_sums("s_text", 0, 8, "nb").alias("b_dyn"),
+            )
+            .collect()
+        )
+        assert len(rows) == 600, vec
+        for r in rows:
+            n, d, l2, sums, b, b_dyn = want[(r["vec_id"], r["e2_id"])]
+            assert bits(r["n_text"]) == bits(r["n_arrow"]) == bits(n), vec
+            assert bits(r["p_arrow"]["nrm"]) == bits(n), vec
+            assert bits(r["d_text"]) == bits(r["d_arrow"]) == bits(d), vec
+            assert bits(r["l2_text"]) == bits(l2), vec
+            assert [bits(x) for x in r["s_text"]] == [bits(x) for x in sums], vec
+            assert [bits(x) for x in r["p_arrow"]["sums"]] == [bits(x) for x in sums], vec
+            assert r["b_text"] == r["b_arrow"] == b, vec
+            assert r["b_dyn"] == b_dyn == b % (1 << r["nb"]), vec
 
 
 def test_fused_fold_single_evaluation_plan_shape(spark):
@@ -104,26 +147,26 @@ def test_fused_fold_single_evaluation_plan_shape(spark):
     from hadoop_1_spark.session import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").limit(50)
-    signs = similarity.hyperplane_signs(8)
+    signs = folds.hyperplane_signs(8)
 
     # Expression (reference) form: fold in select 1, bits derived in select 2.
     pre = emb.select(
-        "vec_id", similarity.signed_sums_fused(F.col("embedding"), signs).alias("_sums")
+        "vec_id", F.expr(folds.signed_sums_spark("embedding", signs)).alias("_sums")
     )
     out = pre.select(
-        "vec_id", similarity.bucket_from_sums("_sums", 0, 8).alias("b")
+        "vec_id", folds.bucket_from_sums("_sums", 0, 8).alias("b")
     )
     optimized = out._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("aggregate(") == 1, optimized
 
     # Arrow form: one python-UDF eval stage, referenced fields notwithstanding.
     pre_a = emb.select(
-        "vec_id", similarity.project_udf(signs)(F.col("embedding")).alias("_p")
+        "vec_id", folds.project_udf(signs)(F.col("embedding")).alias("_p")
     )
     out_a = pre_a.select(
         "vec_id",
         F.col("_p.nrm").alias("nrm"),
-        similarity.bucket_from_sums("_p.sums", 0, 8).alias("b"),
+        folds.bucket_from_sums("_p.sums", 0, 8).alias("b"),
     )
     physical = out_a._jdf.queryExecution().executedPlan().toString()
     assert physical.count("ArrowEvalPython") == 1, physical
@@ -138,12 +181,14 @@ def test_lsh_bucket_partitioned_corpus_prunes_probes(spark, tmp_path):
     from hadoop_1_spark.session import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    signs = similarity.hyperplane_signs(4)
+    signs = folds.hyperplane_signs(4)
     out = str(tmp_path / "ann_corpus")
     emb.select(
         "vec_id",
         "embedding",
-        similarity.bucket_expr(F.col("embedding"), signs).alias("bucket"),
+        F.expr(folds.signed_sums_spark("embedding", signs)).alias("_s"),
+    ).select(
+        "vec_id", "embedding", folds.bucket_from_sums("_s", 0, 4).alias("bucket")
     ).write.partitionBy("bucket").mode("overwrite").parquet(out)
 
     corpus = spark.read.parquet(out)
@@ -346,12 +391,12 @@ def test_hard_negatives_bucketed_apart(spark):
     negs = similarity.negative_mine_topk(emb, queries, k=3).collect()
     assert negs
     # every mined negative's bucket differs from its query's bucket
-    signs = similarity.hyperplane_signs(4)
+    signs = folds.hyperplane_signs(4)
     buckets = {
         r["vec_id"]: r["b"]
         for r in emb.select(
-            "vec_id", similarity.bucket_expr(F.col("embedding"), signs).alias("b")
-        ).collect()
+            "vec_id", F.expr(folds.signed_sums_spark("embedding", signs)).alias("_s")
+        ).select("vec_id", folds.bucket_from_sums("_s", 0, 4).alias("b")).collect()
     }
     per_q: dict[int, int] = {}
     for r in negs:
@@ -814,7 +859,7 @@ def test_ivf_pq_scan_equals_cell_restricted_flat_pq(spark, tmp_path):
             qs.crossJoin(F.broadcast(cents)).select(
                 "query_id",
                 F.col("cid").alias(f"c{i}"),
-                similarity.l2_chain(F.col("_qs"), F.col("cvec")).alias(f"_d{i}"),
+                F.expr(folds.l2_spark("_qs", "cvec")).alias(f"_d{i}"),
             )
         )
     for i in range(4):
@@ -1139,7 +1184,7 @@ def test_lsh_topk_scan_matches_oracle(spark, duck):
 def test_lsh_topk_scan_equals_inline_lsh(spark, tmp_path):
     """The parked-signature scan must return exactly what lsh_ann_topk
     computes inline — same buckets (deterministic hyperplanes), same
-    parked norms (project_udf nrm is bit-identical to _norm), same
+    parked norms (project_udf nrm is bit-identical to folds.norm_spark), same
     cosine chain, same ranks."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = emb.where("vec_id < 10")
