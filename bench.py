@@ -198,8 +198,8 @@ BENCH_QUERIES = [
     "sim_ivf_pq_residual_topk_scan",  # by_residual IVF-PQ (FAISS default layout)
     "sim_bq_topk",             # binary-quantization tier: xor+popcount scan
     "sim_bq_ivf_topk",         # parked binary tier: DPP-pruned cells x xor+popcount
-    "sim_ivf_auto_topk_scan",  # isqrt(n)-cell parked IVF, broadcast-join probe
-    "sim_ivf_pq_auto_topk_scan",  # auto-k IVF-PQ twin (probe="join")
+    "sim_ivf_auto_topk_scan",  # isqrt(n)-cell parked IVF
+    "sim_ivf_pq_auto_topk_scan",  # auto-k IVF-PQ twin
     "corpus_dsir_select",      # DSIR importance selection (hashed-bigram models)
     "dedup_containment",       # directed n-gram containment (quote/subset dups)
     "dedup_containment_capped",# df_cap skew-guarded twin (the gated scale path)

@@ -69,11 +69,8 @@ def _cosine(qv: Column, cv: Column, qn: Column, cn: Column) -> Column:
     return F.round(folds.DOT_FOLD(qv, cv) / (qn * cn), 9)
 
 
-def _score(q: DataFrame, c: DataFrame, extra_cond=None) -> DataFrame:
-    cond = q["query_id"] != c["neighbor_id"]
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return q.join(c, cond).select(
+def _score(q: DataFrame, c: DataFrame) -> DataFrame:
+    return q.join(c, q["query_id"] != c["neighbor_id"]).select(
         "query_id",
         "neighbor_id",
         _cosine(q["qv"], c["cv"], q["qn"], c["cn"]).alias("cosine"),
@@ -350,7 +347,6 @@ def kmeans_train_assign(
     vec_col: str = "embedding",
     dims: int = folds.DIMS,
     use_arrow: bool = True,
-    cache_points: bool = False,
     init: str = "hash",
     keep_vector: bool = False,
     return_centroids: bool = False,
@@ -399,17 +395,11 @@ def kmeans_train_assign(
         k = max(2, math.isqrt(emb.count()))
     if init not in ("hash", "kmeanspp"):
         raise ValueError(f"unknown init {init!r} (want 'hash' or 'kmeanspp')")
-    # The loop reads the points 2*iters+1 times. cache_points pins the
-    # (id, vec) projection once (standard Lloyd practice, what MLlib
-    # does) — the right call when the source is a remote/expensive scan.
-    # A/B'd at sf0.1 and left OFF by default: the blocking materialization
-    # job costs more than the re-scans it saves on a local parquet table
-    # (2.9 s -> ~4 s measured), and column-pruned re-scans are cheap.
+    # The loop re-reads the column-pruned (id, vec) projection 2*iters+1
+    # times rather than caching it: A/B'd at sf0.1, the blocking
+    # materialization job cost more than the re-scans it saves on a local
+    # parquet table (2.9 s -> ~4 s).
     emb = emb.select(F.col(id_col), F.col(vec_col))
-    if cache_points:
-        from hadoop_1_spark.operators.caching import persist_tracked
-
-        emb = persist_tracked(emb)
     if seeds is not None:
         cents = emb.sparkSession.createDataFrame(
             [(i, [float(x) for x in v]) for i, v in enumerate(seeds)],
@@ -1118,9 +1108,15 @@ def mmr_topk(
     # later step — the final k=3 plan carried 62 scans of the cached
     # candidates and 409 nodes, all recomputation of k tiny relations.
     # localCheckpoint(eager=False) per step truncates the lineage exactly
-    # like connected_components' rounds: each step's picks materialize
-    # once inside the same (single) job, later steps read the RDD. Rows
-    # are identical — checkpointing only cuts lineage, and the greedy
+    # like connected_components' rounds: later steps read the step's RDD.
+    # It is not free at build time: under AQE, turning a step's plan into
+    # that RDD runs the step's shuffle stages, so building sim_mmr_topk
+    # starts 8 Spark jobs (sf0.001 on a 4-core VM: 0.8-1.3 s of build,
+    # most of the row). Swapping in persist_tracked runs no build job,
+    # but the un-truncated optimized plan grows from 135 to 3,910 lines
+    # and the row took 1.97-2.61 s against 1.23-1.38 s with the
+    # checkpoints in the same A/B, so the checkpoints stay. Rows are
+    # identical — checkpointing only cuts lineage, and the greedy
     # recursion itself is untouched. The checkpoints are registered with
     # caching, so the next query's release_caches() frees their blocks.
     selected = local_checkpoint(pick)
@@ -1732,7 +1728,7 @@ def ivf_pq_park(
     residual distribution. Either way both trainings are the existing
     deterministic recipes and the oracle composes their replays.
     ``k_cells=None`` derives max(2, isqrt(n)) coarse cells exactly as
-    ivf_park's auto-k (probe such an index with probe="join")."""
+    ivf_park's auto-k."""
     assigned, cvals, cids = kmeans_train_assign(
         corpus,
         k=k_cells,
@@ -1793,12 +1789,12 @@ def ivf_pq_topk_scan(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     by_residual: bool = False,
-    probe: str = "unrolled",
 ) -> DataFrame:
     """IVF-PQ top-k against the PARKED index (ivf_pq_park's artifact) —
-    the production vector-search read path end-to-end: load the coarse
-    centroids + PQ codebooks (bounded driver reads — the models), assign
-    each query to its cell in-plan (same argmin rule as training), read
+    the production vector-search read path end-to-end: collect the PQ
+    codebooks (a bounded driver read — the model), assign each query to
+    its cell in-plan against the parked centroid relation
+    (ivf_probe_cells, the same argmin rule as training), read
     ONLY the probed cells' PQ codes (dynamic partition pruning on the
     broadcast cell join), sum m LUT lookups per candidate, cut the
     shortlist, and exact-rerank the <= |queries| x rerank survivors
@@ -1818,30 +1814,11 @@ def ivf_pq_topk_scan(
     ``by_residual=True`` reads an index parked with the same flag: the
     LUT side switches to per-(query, probed-cell) tables over the query
     residual (see _pq_adc_scan) — everything else (DPP-pruned code read,
-    ADC adds, shortlist, exact float rerank) is the same plan.
-
-    ``probe="join"`` uses the broadcast-join cell assignment
-    (ivf_probe_cells_join) — the any-k probe for auto-k
-    (isqrt(n)-cell) parked indexes, where unrolled per-centroid plan
-    literals stop being viable; the centroid model then enters the plan
-    only as the broadcast k-row relation, never collected."""
-    if probe not in ("unrolled", "join"):
-        raise ValueError(f"unknown probe {probe!r} (want 'unrolled' or 'join')")
+    ADC adds, shortlist, exact float rerank) is the same plan, and the
+    parked centroid relation doubles as the residual model."""
     spark = queries.sparkSession
-    cents_df = spark.read.parquet(f"{path}/centroids")
-    if probe == "join":
-        qcells = ivf_probe_cells_join(queries, cents_df, nprobe, id_col, vec_col)
-        residual_cents = cents_df if by_residual else None
-    else:
-        cents = sorted(
-            (int(r["cid"]), list(r["cvec"])) for r in cents_df.collect()
-        )
-        qcells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
-        residual_cents = None
-        if by_residual:
-            residual_cents = spark.createDataFrame(
-                [(c, v) for c, v in cents], "cid int, cvec array<double>"
-            )
+    cents = spark.read.parquet(f"{path}/centroids")
+    qcells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
     cb = spark.read.parquet(f"{path}/codebooks").collect()
     books: list[tuple[list[list[float]], list[int]]] = []
     for s in range(m):
@@ -1864,7 +1841,7 @@ def ivf_pq_topk_scan(
         id_col,
         vec_col,
         qcells=qcells,
-        residual_cents=residual_cents,
+        residual_cents=cents if by_residual else None,
     )
 
 
@@ -1894,9 +1871,7 @@ def ivf_park(
     sqrt(n) cell count that keeps expected cell size ~sqrt(n), so probe
     cost (nprobe cells) and per-cell scan cost grow as sqrt(corpus)
     instead of one of them being fixture-pinned (round-11: the k_cells=8
-    default is sf0.1-sized; auto-k is the 100 TB knob). Probing a
-    many-cell parked index should use ivf_probe_cells_join (any-k probe)
-    rather than the unrolled-literal form."""
+    default is sf0.1-sized; auto-k is the 100 TB knob)."""
     assigned, cvals, cids = kmeans_train_assign(
         corpus,
         k=k_cells,
@@ -1921,56 +1896,21 @@ def ivf_park(
 
 def ivf_probe_cells(
     queries: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(query_id, qcell) for each query's ``nprobe`` nearest coarse cells
-    — rank by (fixed-order l2 distance, cid), exactly the training argmin
-    extended past rank 1, so nprobe=1 reproduces the trained assignment
-    for corpus members and the kmeans oracle CTEs replay any nprobe via
-    the same row_number recursion. array_sort on (d, cid) structs is the
-    lexicographic (dist, cid) order; cells are disjoint, so multi-probe
-    candidates never need a dedup.
-
-    r14: the whole ranked-probe expression is ONE F.expr parse — the
-    per-centroid Column-built l2/struct loop paid ~2 higher-order-call
-    round-trip sets per centroid at plan-build time; the parsed
-    expression is identical."""
-    structs = ", ".join(
-        f"named_struct('d', {folds.l2_spark(folds.quote_ident(vec_col), folds.lit_vec_text(v))},"
-        f" 'cid', {int(cid)})"
-        for cid, v in cents
-    )
-    ranked = (
-        f"transform(slice(array_sort(array({structs})), 1, {int(nprobe)}),"
-        " s -> s.cid)"
-    )
-    return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(F.expr(ranked)).alias("qcell"),
-    )
-
-
-def ivf_probe_cells_join(
-    queries: DataFrame,
     cents: DataFrame,
     nprobe: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(query_id, qcell) via broadcast join + window — the ANY-k probe
-    twin of ivf_probe_cells: the unrolled-literal form embeds k x dims
-    constants into the plan (right for a fixture-sized k; expression
-    count blows past whole-stage codegen limits at a few hundred cells),
-    while this crossJoins the broadcast k-row centroid relation and ranks
-    by the same (fixed-order folds.l2_spark, cid) order — the exact assignment
-    shape kmeans training itself uses (assign()'s min(struct)), so
-    nprobe=1 still reproduces the trained cell for corpus members and
-    the kmeans oracle CTEs replay any nprobe with a row_number. The
-    window ranks |queries| x k rows — the query side of an ANN probe,
-    never the corpus."""
+    """(query_id, qcell) for each query's ``nprobe`` nearest coarse cells:
+    crossJoin the broadcast k-row centroid relation (cid, cvec — the
+    parked ``centroids``) and rank by (fixed-order folds.l2_spark, cid),
+    the assignment order kmeans training itself uses (assign()'s
+    min(struct)). So nprobe=1 reproduces the trained cell for corpus
+    members and the kmeans oracle CTEs replay any nprobe with a
+    row_number; cells are disjoint, so multi-probe candidates never need
+    a dedup. The centroids stay a relation (never collected into plan
+    literals), so any k works; the window ranks |queries| x k rows — the
+    query side of an ANN probe, never the corpus."""
     scored = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
         .crossJoin(F.broadcast(cents))
@@ -1995,16 +1935,13 @@ def ivf_topk_scan(
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe: str = "unrolled",
 ) -> DataFrame:
-    """IVF top-k against a PARKED index (ivf_park's artifact): load the
-    centroid model (bounded driver read — k_cells rows, the IVF
-    equivalent of pq_adc_topk_scan's codebook collect), assign each query
-    to its nearest centroid IN-PLAN with the same argmin rule training
-    used (fixed-order folds.l2_spark against bit-equal lit_vec_text
-    constants, ties by cid — so a corpus-member query lands in exactly
-    its trained cell, and the kmeans oracle CTEs replay the assignment),
-    and score only the matching cells.
+    """IVF top-k against a PARKED index (ivf_park's artifact): read the
+    k-row centroid model, assign each query to its nearest centroid
+    IN-PLAN with the same argmin rule training used (ivf_probe_cells:
+    fixed-order folds.l2_spark, ties by cid — so a corpus-member query
+    lands in exactly its trained cell, and the kmeans oracle CTEs replay
+    the assignment), and score only the matching cells.
 
     Shape at 100 TB: queries broadcast; the cells relation is partitioned
     by cell, so the broadcast join on the partition column lets dynamic
@@ -2013,29 +1950,11 @@ def ivf_topk_scan(
     shrink probe cost exactly as ivf_topk's label-cell economics;
     ``nprobe`` > 1 scans each query's nprobe nearest cells — the
     standard IVF recall/latency knob (nprobe = k_cells degenerates to
-    the exact brute-force scan).
-
-    ``probe="join"`` assigns queries to cells via the broadcast-join
-    probe (ivf_probe_cells_join) instead of the unrolled per-centroid
-    literals — required for auto-k (isqrt(n)-cell) parked indexes where
-    the unrolled form's k x dims plan constants stop being viable."""
-    if probe not in ("unrolled", "join"):
-        raise ValueError(f"unknown probe {probe!r} (want 'unrolled' or 'join')")
+    the exact brute-force scan)."""
     spark = queries.sparkSession
-    if probe == "join":
-        cells = ivf_probe_cells_join(
-            queries,
-            spark.read.parquet(f"{path}/centroids"),
-            nprobe,
-            id_col,
-            vec_col,
-        )
-    else:
-        cents = sorted(
-            (int(r["cid"]), list(r["cvec"]))
-            for r in spark.read.parquet(f"{path}/centroids").collect()
-        )
-        cells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
+    cells = ivf_probe_cells(
+        queries, spark.read.parquet(f"{path}/centroids"), nprobe, id_col, vec_col
+    )
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -2093,16 +2012,12 @@ def bq_ivf_topk_scan(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int = folds.DIMS,
-    probe: str = "unrolled",
 ) -> DataFrame:
     """Partition-pruned binary-quantization ANN against a parked IVF
-    index: load the k-row centroid model, assign each query to its
+    index: read the k-row centroid model, assign each query to its
     ``nprobe`` nearest trained cells in-plan (ivf_probe_cells — the same
-    argmin rule training used, so the oracle's kmeans CTEs replay it;
-    ``probe="join"`` swaps in ivf_probe_cells_join's broadcast-join
-    probe, required for auto-k isqrt(n)-cell parked indexes exactly as
-    in ivf_topk_scan / ivf_pq_topk_scan), scan ONLY the probed cells of
-    the parked binary tier
+    argmin rule training used, so the oracle's kmeans CTEs replay it),
+    scan ONLY the probed cells of the parked binary tier
     (``{path}/bqcodes``: one long per vector, written by bq_ivf_park) by
     xor+popcount Hamming distance, shortlist the ``rerank`` lowest per
     query (ties: hamming ASC, neighbor ASC), and rerank the survivors
@@ -2118,23 +2033,10 @@ def bq_ivf_topk_scan(
     cell directories; the pruned scan touches 8 bytes per candidate;
     floats are read only for <= |queries| x rerank rerank survivors.
     Candidate cost is sum(|probed cells|) longs, never |corpus|."""
-    if probe not in ("unrolled", "join"):
-        raise ValueError(f"unknown probe {probe!r} (want 'unrolled' or 'join')")
     spark = queries.sparkSession
-    if probe == "join":
-        cells = ivf_probe_cells_join(
-            queries,
-            spark.read.parquet(f"{path}/centroids"),
-            nprobe,
-            id_col,
-            vec_col,
-        )
-    else:
-        cents = sorted(
-            (int(r["cid"]), list(r["cvec"]))
-            for r in spark.read.parquet(f"{path}/centroids").collect()
-        )
-        cells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
+    cells = ivf_probe_cells(
+        queries, spark.read.parquet(f"{path}/centroids"), nprobe, id_col, vec_col
+    )
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),

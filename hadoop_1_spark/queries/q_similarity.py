@@ -10,6 +10,12 @@ so ANN candidate sets — not just final scores — must agree.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+from collections.abc import Callable
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +24,33 @@ from hadoop_1_spark.registry import _load, register
 
 K = 5
 NBITS = 4
+
+# md5 of the code that trains and writes the parked indexes, taken once at
+# import: part of every park key, so a change to a *_park operator (or to
+# a fold it uses) parks afresh instead of reusing the old code's index.
+_PARK_CODE_MD5 = hashlib.md5(
+    b"".join(Path(m.__file__).read_bytes() for m in (similarity, folds))
+).hexdigest()
+
+
+def _parked(sf_dir: str, tag: str, part: str, park: Callable[[str], None]) -> str:
+    """Parked-index dir under $TMPDIR for ``sf_dir``'s embeddings, keyed
+    on embeddings.parquet's identity (realpath + size + mtime_ns),
+    _PARK_CODE_MD5 and the hyperparameter ``tag``: a new fixture,
+    parameter or park code parks afresh, a same-data rerun (bench
+    best-of-3, a repeated test run) reuses the trained index. Runs
+    ``park(path)`` unless ``{path}/{part}/_SUCCESS`` exists."""
+    emb = os.path.join(sf_dir, "embeddings.parquet")
+    st = os.stat(emb)
+    key = hashlib.md5(
+        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
+        f"{_PARK_CODE_MD5}:{tag}".encode()
+    ).hexdigest()
+    path = os.path.join(tempfile.gettempdir(), "hadoop_1_spark_park", key)
+    if not os.path.exists(os.path.join(path, part, "_SUCCESS")):
+        park(path)
+    return path
+
 
 # Engine-portable cosine: the SAME fixed-order double fold the Spark side
 # runs (folds.dot_duck) with per-vector precomputed norms; rounds to 9.
@@ -90,12 +123,11 @@ def sim_lsh_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a static corpus, same pattern as sim_ivf_topk_scan). Identical
     hyperplanes and fold order, so the oracle is sim_lsh_topk's
     verbatim. See similarity.lsh_park / similarity.lsh_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir, params=f"lsh:n{NBITS}:s42")
-    if not os.path.exists(os.path.join(path, "buckets", "_SUCCESS")):
-        similarity.lsh_park(emb, path, nbits=NBITS, seed=42)
+    path = _parked(
+        sf_dir, f"lsh:n{NBITS}:s42", "buckets",
+        lambda p: similarity.lsh_park(emb, p, nbits=NBITS, seed=42),
+    )
     return similarity.lsh_topk_scan(
         emb.where("vec_id < 10"), path, k=K, nbits=NBITS, seed=42
     )
@@ -1002,22 +1034,7 @@ p AS (
 """
 
 
-def _pq_park_dir(sf_dir: str) -> str:
-    """Cache dir for the parked PQ index, keyed on the embeddings file's
-    identity (realpath + size + mtime) and the PQ hyperparameters — a new
-    test fixture or a parameter change auto-invalidates; a same-data rerun
-    (bench best-of-3, repeated driver rounds) reuses the trained index."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_pq", key)
+_PQ_TAG = f"pq:m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}"
 
 
 @register("sim_pq_topk_scan", oracle=_pq_adc_oracle())
@@ -1031,14 +1048,10 @@ def sim_pq_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order folds, decimal-exact means), so the SQL-retrained
     codebooks are bit-identical to the parked ones and the scan must
     produce the same candidates. See similarity.pq_adc_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _pq_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.pq_park(
-            emb, path, m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS
-        )
+    path = _parked(sf_dir, _PQ_TAG, "codes", lambda p: similarity.pq_park(
+        emb, p, m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS
+    ))
     return similarity.pq_adc_topk_scan(
         emb,
         emb.where("vec_id < 10"),
@@ -1061,14 +1074,10 @@ def sim_pq_topk_scan_r50(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank rows), nothing on the code scan. Shares the parked index
     with sim_pq_topk_scan (same data/params fingerprint); the oracle
     replays the wider shortlist cut exactly."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _pq_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.pq_park(
-            emb, path, m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS
-        )
+    path = _parked(sf_dir, _PQ_TAG, "codes", lambda p: similarity.pq_park(
+        emb, p, m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS
+    ))
     return similarity.pq_adc_topk_scan(
         emb,
         emb.where("vec_id < 10"),
@@ -1099,24 +1108,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_park_dir(sf_dir: str, params: str | None = None) -> str:
-    """Parked-IVF cache dir keyed on the embeddings file identity
-    (realpath + size + mtime) and the training hyperparameters — the
-    same fingerprint recipe as _pq_park_dir: a new fixture or parameter
-    change auto-invalidates, a same-data rerun reuses the trained index.
-    ``params`` overrides the hyperparameter tag (the auto-k twin parks
-    under its own key, never colliding with the fixture k=8 index)."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"{params or f'k{KM_K}:i{KM_ITERS}'}".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_ivf", key)
+_IVF_TAG = f"ivf:k{KM_K}:i{KM_ITERS}"
 
 
 # IVF over TRAINED cells: replay kmeans (afinal = vec_id -> cid), probe the
@@ -1148,12 +1140,10 @@ def sim_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds, fixed-order folds, decimal-exact means), so the parked
     assignment and the SQL-retrained one are identical.
     See similarity.ivf_park / similarity.ivf_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=KM_K, iters=KM_ITERS)
+    path = _parked(sf_dir, _IVF_TAG, "cells", lambda p: similarity.ivf_park(
+        emb, p, k_cells=KM_K, iters=KM_ITERS
+    ))
     return similarity.ivf_topk_scan(emb.where("vec_id < 10"), path, k=K)
 
 
@@ -1214,21 +1204,7 @@ p AS (
     )
 
 
-def _ivf_pq_park_dir(sf_dir: str, kc: str | None = None) -> str:
-    """Parked IVF-PQ cache dir — the _pq_park_dir fingerprint recipe over
-    BOTH trainings' hyperparameters. ``kc`` overrides the coarse-cell
-    tag (the auto-k twin parks under kc=auto)."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"kc{kc or KM_K}:ci{KM_ITERS}:m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_ivfpq", key)
+_IVF_PQ_TAG = f"ivfpq:ci{KM_ITERS}:m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}"
 
 
 @register("sim_ivf_pq_topk_scan", oracle=_ivf_pq_oracle())
@@ -1241,21 +1217,14 @@ def sim_ivf_pq_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint; the oracle composes the kmeans-cell replay with the
     flat PQ scan oracle restricted to same-cell candidates. See
     similarity.ivf_pq_park / similarity.ivf_pq_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_pq_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.ivf_pq_park(
-            emb,
-            path,
-            k_cells=KM_K,
-            cell_iters=KM_ITERS,
-            m=PQ_M,
-            subdim=PQ_SUBDIM,
-            kcb=PQ_K,
-            iters=PQ_ITERS,
-        )
+    path = _parked(
+        sf_dir, f"{_IVF_PQ_TAG}:kc{KM_K}", "codes",
+        lambda p: similarity.ivf_pq_park(
+            emb, p, k_cells=KM_K, cell_iters=KM_ITERS,
+            m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS,
+        ),
+    )
     return similarity.ivf_pq_topk_scan(
         emb,
         emb.where("vec_id < 10"),
@@ -1349,22 +1318,6 @@ p AS (
     )
 
 
-def _ivf_pq_res_park_dir(sf_dir: str) -> str:
-    """Parked by_residual IVF-PQ cache dir (own namespace — the codebooks
-    are trained on a different relation than the raw-vector index's)."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"kc{KM_K}:ci{KM_ITERS}:m{PQ_M}:d{PQ_SUBDIM}:k{PQ_K}:i{PQ_ITERS}:res".encode()
-    ).hexdigest()
-    return os.path.join(tempfile.gettempdir(), "hadoop_1_spark_ivfpqr", key)
-
-
 @register("sim_ivf_pq_residual_topk_scan", oracle=_ivf_pq_residual_oracle())
 def sim_ivf_pq_residual_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """by_residual IVF-PQ top-5 against the PARKED index — the FAISS
@@ -1376,22 +1329,15 @@ def sim_ivf_pq_residual_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     shape is identical to sim_ivf_pq_topk_scan (DPP-pruned cell read, m
     LUT adds, exact float rerank). The oracle replays both trainings with
     PQ pointed at the residual CTE and LUTs keyed (query, cell)."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_pq_res_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.ivf_pq_park(
-            emb,
-            path,
-            k_cells=KM_K,
-            cell_iters=KM_ITERS,
-            m=PQ_M,
-            subdim=PQ_SUBDIM,
-            kcb=PQ_K,
-            iters=PQ_ITERS,
+    path = _parked(
+        sf_dir, f"{_IVF_PQ_TAG}:kc{KM_K}:res", "codes",
+        lambda p: similarity.ivf_pq_park(
+            emb, p, k_cells=KM_K, cell_iters=KM_ITERS,
+            m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS,
             by_residual=True,
-        )
+        ),
+    )
     return similarity.ivf_pq_topk_scan(
         emb,
         emb.where("vec_id < 10"),
@@ -1447,12 +1393,10 @@ def sim_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamic partition pruning still limiting the read to the probed cell
     directories. nprobe = k_cells would degenerate to the brute-force
     exact scan. See similarity.ivf_probe_cells."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=KM_K, iters=KM_ITERS)
+    path = _parked(sf_dir, _IVF_TAG, "cells", lambda p: similarity.ivf_park(
+        emb, p, k_cells=KM_K, iters=KM_ITERS
+    ))
     return similarity.ivf_topk_scan(
         emb.where("vec_id < 10"), path, k=K, nprobe=IVF_NPROBE
     )
@@ -1517,14 +1461,11 @@ def sim_bq_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranked under the exact cosine contract. Scan bytes per query:
     8 x sum(|probed cells|) — never the corpus, never floats.
     See similarity.bq_ivf_park / similarity.bq_ivf_topk_scan."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=KM_K, iters=KM_ITERS)
-    if not os.path.exists(os.path.join(path, "bqcodes", "_SUCCESS")):
-        similarity.bq_ivf_park(spark, path)
+    path = _parked(sf_dir, _IVF_TAG, "cells", lambda p: similarity.ivf_park(
+        emb, p, k_cells=KM_K, iters=KM_ITERS
+    ))
+    _parked(sf_dir, _IVF_TAG, "bqcodes", lambda p: similarity.bq_ivf_park(spark, p))
     return similarity.bq_ivf_topk_scan(
         emb, emb.where("vec_id < 10"), path, k=K, rerank=RERANK,
         nprobe=IVF_NPROBE,
@@ -1553,21 +1494,17 @@ def sim_ivf_auto_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = max(2, isqrt(n)) at park time (expected cell size ~sqrt(n) — the
     FAISS-style default that keeps probe cost AND per-cell scan cost
     sqrt(corpus) as data grows, where the fixture k=8 would let cells
-    grow linearly), and the probe uses the broadcast-join assignment
-    (ivf_probe_cells_join) instead of unrolled per-centroid literals —
-    the any-k probe an isqrt(n)-cell index requires. Oracle replays
+    grow linearly), and the probe is the same broadcast-join assignment
+    every parked scan uses, which works for any k. Oracle replays
     training with the same isqrt(n) via a scalar-subquery LIMIT in the
     seeds CTE. See similarity.ivf_park (k_cells=None) /
-    similarity.ivf_probe_cells_join."""
-    import os
-
+    similarity.ivf_probe_cells."""
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_park_dir(sf_dir, params=f"kauto:i{KM_ITERS}")
-    if not os.path.exists(os.path.join(path, "cells", "_SUCCESS")):
-        similarity.ivf_park(emb, path, k_cells=None, iters=KM_ITERS)
-    return similarity.ivf_topk_scan(
-        emb.where("vec_id < 10"), path, k=K, probe="join"
+    path = _parked(
+        sf_dir, f"ivf:kauto:i{KM_ITERS}", "cells",
+        lambda p: similarity.ivf_park(emb, p, k_cells=None, iters=KM_ITERS),
     )
+    return similarity.ivf_topk_scan(emb.where("vec_id < 10"), path, k=K)
 
 
 @register("sim_ivf_pq_auto_topk_scan", oracle=_ivf_pq_oracle(k=_AUTO_K_SQL))
@@ -1575,23 +1512,22 @@ def sim_ivf_pq_auto_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-5 against an AUTO-SIZED parked index — the auto-k twin
     of sim_ivf_pq_topk_scan: k_cells=None trains max(2, isqrt(n)) coarse
     cells (expected cell size ~sqrt(n)), the probe assigns queries with
-    the broadcast-join rule (probe="join" — the centroid model is never
-    collected), and the DPP-pruned code read + LUT adds + shortlist +
+    the broadcast-join rule (ivf_probe_cells — the centroid model is
+    never collected), and the DPP-pruned code read + LUT adds + shortlist +
     exact rerank are byte-for-byte sim_ivf_pq_topk_scan's fragments.
     The oracle is _ivf_pq_oracle with the cell training's seeds LIMIT
     swapped to the isqrt(n) scalar subquery. Together with
     sim_ivf_auto_topk_scan this closes the auto-k story for both parked
     tiers (floats and PQ codes)."""
-    import os
-
     emb = _load(spark, sf_dir, "embeddings")
-    path = _ivf_pq_park_dir(sf_dir, kc="auto")
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        similarity.ivf_pq_park(
-            emb, path, k_cells=None, cell_iters=KM_ITERS,
+    path = _parked(
+        sf_dir, f"{_IVF_PQ_TAG}:kcauto", "codes",
+        lambda p: similarity.ivf_pq_park(
+            emb, p, k_cells=None, cell_iters=KM_ITERS,
             m=PQ_M, subdim=PQ_SUBDIM, kcb=PQ_K, iters=PQ_ITERS,
-        )
+        ),
+    )
     return similarity.ivf_pq_topk_scan(
         emb, emb.where("vec_id < 10"), path, k=K, rerank=PQ_RERANK,
-        m=PQ_M, subdim=PQ_SUBDIM, probe="join",
+        m=PQ_M, subdim=PQ_SUBDIM,
     )

@@ -80,12 +80,6 @@ def test_vocab_table_ids_and_kinds(spark):
     assert by_symbol["ab"]["cnt"] == 2
 
 
-def test_bpe_fertility_matches_oracle(spark, duck):
-    from tests.conftest import assert_query_matches_oracle
-
-    assert_query_matches_oracle(spark, duck, "text_bpe_fertility")
-
-
 def test_bpe_fertility_bounds(spark):
     # fertility >= 1 (a word is at least one piece) and pieces <= chars
     from hadoop_1_spark import registry

@@ -42,15 +42,6 @@ def test_split_partitions_the_search():
     assert total == 4
 
 
-def test_pentomino_dancing_6x10(spark, duck):
-    """The flagship invariant: 2339 distinct 6x10 pentomino tilings,
-    computed distributed over 548 depth-3 prefixes (driver-style oracle
-    compare against the published constant)."""
-    from tests.conftest import assert_query_matches_oracle
-
-    assert_query_matches_oracle(spark, duck, "pentomino_dancing")
-
-
 def test_sudoku_reference_format_and_unique_solution():
     """Parse the reference's '?' puzzle grammar and solve a 9x9 with a
     unique solution: the fixture blanks 45 cells of the canonical

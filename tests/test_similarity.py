@@ -243,12 +243,6 @@ def test_semantic_dedup_subset_of_all_pairs(spark):
         assert sem, (len(sem), len(allp))
 
 
-def test_dedup_semantic_auto_matches_oracle(spark, duck):
-    from tests.conftest import assert_query_matches_oracle
-
-    assert_query_matches_oracle(spark, duck, "dedup_semantic_auto")
-
-
 def test_dedup_semantic_auto_equals_explicit_isqrt_k(spark):
     """The k=None auto sizing must be exactly max(2, isqrt(n)) explicit
     cells — same clusters, same in-cell pairs."""
@@ -469,10 +463,6 @@ def test_knn_graph_symmetric_in_bucket(spark):
     else:
         # with 50 vectors in 64 buckets, at least one mutual pair exists
         raise AssertionError("no mutual nearest pair found")
-
-
-def test_mmr_matches_oracle(spark, duck):
-    assert_query_matches_oracle(spark, duck, "sim_mmr_topk")
 
 
 def test_mmr_prefers_diversity(spark):
@@ -1125,22 +1115,28 @@ def test_ivf_auto_topk_scan_matches_oracle(spark, duck):
 
 
 def test_probe_join_equals_unrolled_probe(spark, tmp_path):
-    """The broadcast-join probe must pick EXACTLY the cells the
-    unrolled-literal probe picks (same fixed-order l2, same (d, cid)
-    tie-break) for every query and nprobe — the any-k twin can never
-    change an assignment."""
+    """The broadcast-join probe at nprobe=1 must put every corpus member
+    in exactly its parked ``cells`` partition (same fixed-order l2, same
+    (d, cid) tie-break as training), and nprobe=3 must return 3 distinct
+    cells per query."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     path = str(tmp_path / "ivf")
     similarity.ivf_park(emb, path, k_cells=4, iters=1)
-    cents_df = spark.read.parquet(f"{path}/centroids")
-    cents = sorted((int(r["cid"]), list(r["cvec"])) for r in cents_df.collect())
+    cents = spark.read.parquet(f"{path}/centroids")
+    parked = {
+        (r["vec_id"], int(r["cell"]))
+        for r in spark.read.parquet(f"{path}/cells").select("vec_id", "cell").collect()
+    }
+    got = {(r["query_id"], r["qcell"]) for r in similarity.ivf_probe_cells(
+        emb, cents, 1, "vec_id", "embedding").collect()}
+    assert got == parked
     q = emb.where("vec_id < 30")
-    for nprobe in (1, 3):
-        a = {(r["query_id"], r["qcell"]) for r in similarity.ivf_probe_cells(
-            q, cents, nprobe, "vec_id", "embedding").collect()}
-        b = {(r["query_id"], r["qcell"]) for r in similarity.ivf_probe_cells_join(
-            q, cents_df, nprobe, "vec_id", "embedding").collect()}
-        assert a == b
+    rows = similarity.ivf_probe_cells(q, cents, 3, "vec_id", "embedding").collect()
+    per_query: dict[int, list[int]] = {}
+    for r in rows:
+        per_query.setdefault(r["query_id"], []).append(r["qcell"])
+    assert len(per_query) == q.count()
+    assert all(len(c) == len(set(c)) == 3 for c in per_query.values())
 
 
 def test_ivf_park_auto_k_is_isqrt(spark, tmp_path):
@@ -1156,25 +1152,6 @@ def test_ivf_park_auto_k_is_isqrt(spark, tmp_path):
 
 def test_ivf_pq_auto_topk_scan_matches_oracle(spark, duck):
     assert_query_matches_oracle(spark, duck, "sim_ivf_pq_auto_topk_scan")
-
-
-def test_ivf_pq_residual_join_probe_bit_identical(spark, tmp_path):
-    """by_residual + probe="join" (residual_cents read straight from the
-    parked parquet, never collected) must return exactly what the
-    unrolled probe returns — same cells, same LUTs, same ranks."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "res")
-    similarity.ivf_pq_park(
-        emb, path, k_cells=4, cell_iters=1, m=4, subdim=16, kcb=8,
-        iters=1, by_residual=True,
-    )
-    q = emb.where("vec_id < 5")
-    kw = dict(k=3, rerank=10, m=4, subdim=16, by_residual=True)
-    a = sorted(map(tuple, similarity.ivf_pq_topk_scan(
-        emb, q, path, probe="unrolled", **kw).collect()))
-    b = sorted(map(tuple, similarity.ivf_pq_topk_scan(
-        emb, q, path, probe="join", **kw).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_lsh_topk_scan_matches_oracle(spark, duck):
@@ -1196,30 +1173,49 @@ def test_lsh_topk_scan_equals_inline_lsh(spark, tmp_path):
 
 
 def test_bq_ivf_join_probe_bit_identical(spark, tmp_path):
-    """bq_ivf_topk_scan(probe="join") must return exactly what the
-    unrolled probe returns, including against an auto-k (isqrt(n)-cell)
-    parked index — the composition ADVICE r11 flagged as missing (the
-    binary tier previously only supported the unrolled probe)."""
+    """On an auto-k (isqrt(n)-cell) parked index, bq_ivf_topk_scan with
+    nprobe = every cell must equal the flat bq_topk at the same rerank:
+    all cells probed, so the binary candidate set is the whole corpus
+    minus self (the binary-tier twin of
+    test_ivf_nprobe_all_cells_equals_brute_force)."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").where("vec_id < 200")
     path = str(tmp_path / "auto")
     similarity.ivf_park(emb, path, k_cells=None, iters=1)
     similarity.bq_ivf_park(spark, path)
+    n_cells = spark.read.parquet(f"{path}/centroids").count()
     q = emb.where("vec_id < 5")
-    kw = dict(k=3, rerank=10, nprobe=2)
     a = sorted(map(tuple, similarity.bq_ivf_topk_scan(
-        emb, q, path, probe="unrolled", **kw).collect()))
-    b = sorted(map(tuple, similarity.bq_ivf_topk_scan(
-        emb, q, path, probe="join", **kw).collect()))
+        emb, q, path, k=3, rerank=10, nprobe=n_cells).collect()))
+    b = sorted(map(tuple, similarity.bq_topk(emb, q, k=3, rerank=10).collect()))
     assert a == b and len(a) > 0
 
 
-def test_unknown_probe_raises(spark, tmp_path):
-    import pytest
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").where("vec_id < 50")
-    path = str(tmp_path / "ivf")
-    similarity.ivf_park(emb, path, k_cells=2, iters=1)
-    with pytest.raises(ValueError, match="unknown probe"):
-        similarity.ivf_topk_scan(emb, path, probe="jion")
-    with pytest.raises(ValueError, match="unknown probe"):
-        similarity.bq_ivf_topk_scan(emb, emb, path, probe="jion")
+def test_park_key_covers_park_code(monkeypatch, tmp_path):
+    """The parked-index key includes one md5 of similarity.py and
+    folds.py, so changed park code parks afresh instead of reusing the
+    previous code's index from $TMPDIR; unchanged code reuses it."""
+    import hashlib
+    import os
+    import tempfile
+    from pathlib import Path
+
+    from hadoop_1_spark.queries import q_similarity
+
+    want = hashlib.md5(
+        b"".join(Path(m.__file__).read_bytes() for m in (similarity, folds))
+    ).hexdigest()
+    assert q_similarity._PARK_CODE_MD5 == want
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    parks = []
+
+    def park(p):
+        parks.append(p)
+        os.makedirs(os.path.join(p, "part"))
+        open(os.path.join(p, "part", "_SUCCESS"), "w").close()
+
+    a = q_similarity._parked(SF_DIR, "tag", "part", park)
+    assert q_similarity._parked(SF_DIR, "tag", "part", park) == a
+    monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "0" * 32)
+    b = q_similarity._parked(SF_DIR, "tag", "part", park)
+    assert b != a and parks == [a, b]
