@@ -36,6 +36,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hadoop_1_spark.operators import folds
+from hadoop_1_spark.session import parquet_schema
+
+
+def read_parked(spark, path: str) -> DataFrame:
+    """A part of a parked index (centroids, cells, codes, ...), its schema
+    from session.parquet_schema: a warm read runs no schema job."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -221,7 +228,7 @@ def lsh_topk_scan(
             queries, id_col, vec_col, folds.hyperplane_signs(nbits, seed=seed)
         )
     )
-    c = queries.sparkSession.read.parquet(f"{path}/buckets").select(
+    c = read_parked(queries.sparkSession, f"{path}/buckets").select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         F.col("nrm").alias("cn"),
@@ -1656,14 +1663,14 @@ def pq_adc_topk_scan(
     rerank 20 -> 50 ~doubles PQ recall for 2.5x survivor float reads),
     priced by the sim_pq_topk_scan_r50 bench row."""
     spark = corpus.sparkSession
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
+    cb = read_parked(spark, f"{path}/codebooks").collect()
     books: list[tuple[list[list[float]], list[int]]] = []
     for s in range(m):
         sub_rows = sorted(
             ((r["cid"], list(r["cvec"])) for r in cb if r["sub"] == s)
         )
         books.append(([v for _, v in sub_rows], [c for c, _ in sub_rows]))
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = read_parked(spark, f"{path}/codes")
     return _pq_adc_scan(
         codes, books, corpus, queries, k, rerank, m, subdim, id_col, vec_col
     )
@@ -1817,16 +1824,16 @@ def ivf_pq_topk_scan(
     ADC adds, shortlist, exact float rerank) is the same plan, and the
     parked centroid relation doubles as the residual model."""
     spark = queries.sparkSession
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_parked(spark, f"{path}/centroids")
     qcells = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
+    cb = read_parked(spark, f"{path}/codebooks").collect()
     books: list[tuple[list[list[float]], list[int]]] = []
     for s in range(m):
         sub_rows = sorted(
             ((r["cid"], list(r["cvec"])) for r in cb if r["sub"] == s)
         )
         books.append(([v for _, v in sub_rows], [c for c, _ in sub_rows]))
-    codes = spark.read.parquet(f"{path}/codes").withColumn(
+    codes = read_parked(spark, f"{path}/codes").withColumn(
         "cell", F.col("cell").cast("int")
     )
     return _pq_adc_scan(
@@ -1953,7 +1960,7 @@ def ivf_topk_scan(
     the exact brute-force scan)."""
     spark = queries.sparkSession
     cells = ivf_probe_cells(
-        queries, spark.read.parquet(f"{path}/centroids"), nprobe, id_col, vec_col
+        queries, read_parked(spark, f"{path}/centroids"), nprobe, id_col, vec_col
     )
     q = F.broadcast(
         queries.select(
@@ -1962,7 +1969,7 @@ def ivf_topk_scan(
             F.expr(folds.norm_spark(folds.quote_ident(vec_col))).alias("qn"),
         ).join(cells, "query_id")
     )
-    c = spark.read.parquet(f"{path}/cells").select(
+    c = read_parked(spark, f"{path}/cells").select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         folds.NORM(F.col(vec_col)).alias("cn"),
@@ -1989,7 +1996,7 @@ def bq_ivf_park(spark, path: str, id_col: str = "vec_id", vec_col: str = "embedd
     the cell assignment is the parked one, so the binary tier can never
     disagree with the float tier about cell membership. One scan of the
     parked cells, one 9-byte-per-vector write."""
-    cells = spark.read.parquet(f"{path}/cells")
+    cells = read_parked(spark, f"{path}/cells")
     (
         cells.select(
             F.col(id_col),
@@ -2035,7 +2042,7 @@ def bq_ivf_topk_scan(
     Candidate cost is sum(|probed cells|) longs, never |corpus|."""
     spark = queries.sparkSession
     cells = ivf_probe_cells(
-        queries, spark.read.parquet(f"{path}/centroids"), nprobe, id_col, vec_col
+        queries, read_parked(spark, f"{path}/centroids"), nprobe, id_col, vec_col
     )
     q = F.broadcast(
         queries.select(
@@ -2043,7 +2050,7 @@ def bq_ivf_topk_scan(
             bq_code(vec_col, dims).alias("qcode"),
         ).join(cells, "query_id")
     )
-    c = spark.read.parquet(f"{path}/bqcodes").select(
+    c = read_parked(spark, f"{path}/bqcodes").select(
         F.col(id_col).alias("neighbor_id"),
         F.col("code").alias("ccode"),
         F.col("cell").cast("int").alias("ccell"),

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_1_spark.operators import aggregate as agg
+from hadoop_1_spark.operators import folds
 from hadoop_1_spark.registry import _load, register
 
 UNIQ_CAP = 10
@@ -71,19 +72,21 @@ def agg_sums_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mapred/lib/aggregate + LongSumReducer.java:33): the canonical pricing
     summary. Catalyst's partial aggregation = the reference combiner; at
     100 TB this is one shuffle on a 6-value grouping key."""
-    li = _load(spark, sf_dir, "lineitem")
-    dq = F.col("l_quantity").cast("decimal(18,4)")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
+    dp = folds.money("l_extendedprice")
+    li, qty, price, rev = folds.with_unscaled(
+        _load(spark, sf_dir, "lineitem"),
+        folds.money("l_quantity"), dp, dp * (1 - folds.money("l_discount")),
+    )
+    sum_qty = folds.money_sum(qty).cast("double")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(dq).cast("double").alias("sum_qty"),
-        F.sum(dp).cast("double").alias("sum_base_price"),
+        sum_qty.alias("sum_qty"),
+        folds.money_sum(price).cast("double").alias("sum_base_price"),
         # scale-8 decimal stays a STRING: DuckDB's decimal->double cast
         # double-rounds (int128->double, then /10^8) and drifts 1 ulp from
         # Spark's correctly-rounded cast once the scaled int passes 2^53
         # (surfaced by the sf0.1 oracle sweep; scale-4 sums stay exact)
-        F.sum(dp * (F.lit(1) - dd)).cast("decimal(38,8)").cast("string").alias("sum_disc_price"),
-        (F.sum(dq).cast("double") / F.count("*")).alias("avg_qty"),
+        folds.money_sum(rev).cast("string").alias("sum_disc_price"),
+        (sum_qty / F.count("*")).alias("avg_qty"),
         F.max("l_quantity").cast("double").alias("max_qty"),
         F.min("l_quantity").cast("double").alias("min_qty"),
         F.count("*").cast("bigint").alias("count_order"),
@@ -232,11 +235,11 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference cannot express in one job (SURVEY §2.5 'not present':
     grouping sets/cube/rollup need one MR pass per level there; Spark
     evaluates all levels in a single Expand + one shuffle)."""
-    li = _load(spark, sf_dir, "lineitem")
+    li, qty = folds.with_unscaled(_load(spark, sf_dir, "lineitem"), folds.money("l_quantity"))
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping_id().cast("int").alias("gid"),
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double").alias("sum_qty"),
+        folds.money_sum(qty).cast("double").alias("sum_qty"),
     )
 
 
@@ -254,11 +257,11 @@ GROUP BY CUBE(c_mktsegment, c_nationkey)
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-subsets aggregation via CUBE (extension, same Expand-based
     single-shuffle evaluation)."""
-    cust = _load(spark, sf_dir, "customer")
+    cust, bal = folds.with_unscaled(_load(spark, sf_dir, "customer"), folds.money("c_acctbal"))
     return cust.cube("c_mktsegment", "c_nationkey").agg(
         F.grouping_id().cast("int").alias("gid"),
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("c_acctbal").cast("decimal(18,4)")).cast("double").alias("total_bal"),
+        folds.money_sum(bal).cast("double").alias("total_bal"),
     )
 
 
@@ -589,12 +592,12 @@ def pivot_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines aggregate identical values regardless of partial-agg
     order. Pivot compiles to ONE hash aggregation with conditional
     aggregates — a single shuffle, same cost as the flat groupBy."""
-    li = _load(spark, sf_dir, "lineitem")
+    li, qty = folds.with_unscaled(_load(spark, sf_dir, "lineitem"), folds.money("l_quantity"))
     out = (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["F", "O"])
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("qty"),
+            folds.money_sum(qty).alias("qty"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -827,11 +830,14 @@ def unpivot_pricing_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Spark's native unpivot operator (one Expand node over the
     aggregated rows — no re-scan, no extra shuffle; the oracle replays
     it as a UNION ALL, which is what Expand computes)."""
-    li = _load(spark, sf_dir, "lineitem")
+    li, qty, disc, tax = folds.with_unscaled(
+        _load(spark, sf_dir, "lineitem"),
+        folds.money("l_quantity"), folds.money("l_discount"), folds.money("l_tax"),
+    )
     wide = li.groupBy("l_returnflag").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double").alias("sum_qty"),
-        F.sum(F.col("l_discount").cast("decimal(18,4)")).cast("double").alias("sum_disc"),
-        F.sum(F.col("l_tax").cast("decimal(18,4)")).cast("double").alias("sum_tax"),
+        folds.money_sum(qty).cast("double").alias("sum_qty"),
+        folds.money_sum(disc).cast("double").alias("sum_disc"),
+        folds.money_sum(tax).cast("double").alias("sum_tax"),
     )
     return wide.unpivot(
         ids=["l_returnflag"],

@@ -13,11 +13,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_1_spark.operators import folds
 from hadoop_1_spark.operators import join as J
 from hadoop_1_spark.registry import _load, register
 
 N_KEYS = 10_000  # range upper bound for the synthetic sources
 _DIVS = (2, 3, 4, 5)  # source i has the multiples of _DIVS[i]
+
+# money terms (folds.money_sum): the decimal(18,4) quantity, price and
+# discount, the decimal(6,4) discount the TPC-H completion queries use, and
+# the revenue price * (1 - discount) over each discount
+_Q = folds.money("l_quantity")
+_P = folds.money("l_extendedprice")
+_D = folds.money("l_discount")
+_D6 = folds.money("l_discount", 6)
+_REV = _P * (1 - _D)
+_REV6 = _P * (1 - _D6)
 
 
 def _source(spark: SparkSession, i: int) -> J.JoinExpr:
@@ -131,24 +142,24 @@ def join_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures the shuffled customer-orders side (150k rows) under its
     broadcast threshold and turns the join into a broadcast join; lineitem
     is still read by reducer partition, so the probe and the partial
-    aggregate run on every core. At 100 TB both joins shuffle on their
-    keys with AQE skew-splitting; co-location comes free when the tables
-    are bucketed by custkey/orderkey (the CompositeInputFormat no-shuffle
-    analog)."""
+    aggregate run on every core. Each joined row's revenue is one
+    unscaled long (folds.with_unscaled: two 4-place unscaled values and
+    one checked product), summed on three long lanes (folds.money_sum)
+    instead of two decimal casts, a decimal product and a decimal(38) add
+    per row. At 100 TB both joins shuffle on
+    their keys with AQE skew-splitting; co-location comes free when the
+    tables are bucketed by custkey/orderkey (the CompositeInputFormat
+    no-shuffle analog)."""
     c = _load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     o = _load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderpriority")
     li = _load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("c_mktsegment", "o_orderpriority")
-        .agg(
-            F.count("*").cast("bigint").alias("line_count"),
-            # string-typed exact decimal: see agg_sums_by_flag sum_disc_price
-            F.sum(dp * (F.lit(1) - dd)).cast("decimal(38,8)").cast("string").alias("revenue"),
-        )
+    j, rev = folds.with_unscaled(
+        c.join(o, c.c_custkey == o.o_custkey).join(li, o.o_orderkey == li.l_orderkey), _REV
+    )
+    return j.groupBy("c_mktsegment", "o_orderpriority").agg(
+        F.count("*").cast("bigint").alias("line_count"),
+        # string-typed exact decimal: see agg_sums_by_flag sum_disc_price
+        folds.money_sum(rev).cast("string").alias("revenue"),
     )
 
 
@@ -171,10 +182,13 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     r = _load(spark, sf_dir, "region").select("r_regionkey", "r_name")
     dims = J.broadcast_hash_join(n, r, n.n_regionkey == r.r_regionkey)
-    joined = J.broadcast_hash_join(c, dims, F.col("c_nationkey") == F.col("n_nationkey"))
+    joined, bal = folds.with_unscaled(
+        J.broadcast_hash_join(c, dims, F.col("c_nationkey") == F.col("n_nationkey")),
+        folds.money("c_acctbal"),
+    )
     return joined.groupBy("r_name", "n_name").agg(
         F.count("*").cast("bigint").alias("customers"),
-        F.sum(F.col("c_acctbal").cast("decimal(18,4)")).cast("double").alias("total_acctbal"),
+        folds.money_sum(bal).cast("double").alias("total_acctbal"),
     )
 
 
@@ -260,10 +274,12 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     urgent = _load(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") == "1-URGENT"
     ).select(F.col("o_orderkey").alias("l_orderkey"))
-    filtered = J.bloom_prefilter_semi_join(li, urgent, "l_orderkey")
+    filtered, qty = folds.with_unscaled(
+        J.bloom_prefilter_semi_join(li, urgent, "l_orderkey"), _Q
+    )
     return filtered.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double").alias("sum_qty"),
+        folds.money_sum(qty).cast("double").alias("sum_qty"),
     )
 
 
@@ -288,13 +304,16 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _load(spark, sf_dir, "lineitem")
     supp = _load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    joined = salted_join(
-        li, supp, "l_suppkey", "s_suppkey", 8,
-        salt_src=F.concat_ws(":", "l_orderkey", "l_linenumber"),
+    joined, qty = folds.with_unscaled(
+        salted_join(
+            li, supp, "l_suppkey", "s_suppkey", 8,
+            salt_src=F.concat_ws(":", "l_orderkey", "l_linenumber"),
+        ),
+        _Q,
     )
     return joined.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double").alias("sum_qty"),
+        folds.money_sum(qty).cast("double").alias("sum_qty"),
     )
 
 
@@ -468,9 +487,13 @@ def tpch_q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     under AQE's broadcast threshold (at sf0.1 the filtered orders or the
     date-filtered lineitem, whichever stage finishes first) AQE turns
     it into a broadcast join and reads the other side by reducer
-    partition. At 100 TB both o->l sides stay shuffled. Top-10 is a
-    TakeOrdered over the grouped relation, never a global sort; the rank
-    window runs over the 10 survivors."""
+    partition. At 100 TB both o->l sides stay shuffled. The per-order
+    revenue is summed on long lanes (folds.with_unscaled, then
+    folds.money_sum) in the partial aggregate after the join; its input
+    is the joined, date-filtered rows, a small share of lineitem, so the
+    lanes save little here. Top-10 is a TakeOrdered over the
+    grouped relation, never a global sort; the rank window runs over the
+    10 survivors."""
     from pyspark.sql.window import Window
 
     cu = _load(spark, sf_dir, "customer").where(F.col("c_mktsegment") == Q3_SEGMENT)
@@ -480,18 +503,16 @@ def tpch_q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _load(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > F.lit(Q3_CUT_TS).cast("timestamp_ntz")
     )
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
-    g = (
+    j, rev = folds.with_unscaled(
         cu.join(od, cu["c_custkey"] == od["o_custkey"])
-        .join(li, od["o_orderkey"] == li["l_orderkey"])
-        .groupBy(
-            "l_orderkey",
-            F.unix_micros(F.col("o_orderdate")).alias("orderdate_us"),
-            "o_orderpriority",
-        )
-        .agg(F.sum(dp * (F.lit(1) - dd)).cast("decimal(38,8)").alias("_rev"))
+        .join(li, od["o_orderkey"] == li["l_orderkey"]),
+        _REV,
     )
+    g = j.groupBy(
+        "l_orderkey",
+        F.unix_micros(F.col("o_orderdate")).alias("orderdate_us"),
+        "o_orderpriority",
+    ).agg(folds.money_sum(rev).alias("_rev"))
     top = g.orderBy(
         F.desc("_rev"), F.asc("orderdate_us"), F.asc("l_orderkey")
     ).limit(Q3_K)
@@ -552,8 +573,6 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     su = _load(spark, sf_dir, "supplier")
     na = _load(spark, sf_dir, "nation")
     re = _load(spark, sf_dir, "region").where(F.col("r_name") == Q5_REGION)
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
     j = (
         cu.join(od, cu["c_custkey"] == od["o_custkey"])
         .join(li, od["o_orderkey"] == li["l_orderkey"])
@@ -565,9 +584,8 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(na), su["s_nationkey"] == na["n_nationkey"])
         .join(F.broadcast(re), na["n_regionkey"] == re["r_regionkey"])
     )
-    return j.groupBy("n_name").agg(
-        F.sum(dp * (F.lit(1) - dd)).cast("decimal(38,8)").cast("string").alias("revenue")
-    )
+    j, rev = folds.with_unscaled(j, _REV)
+    return j.groupBy("n_name").agg(folds.money_sum(rev).cast("string").alias("revenue"))
 
 
 Q18_QTY = 300
@@ -596,31 +614,25 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 (large-volume orders): the HAVING-driven semi-join —
     orders whose total lineitem quantity exceeds the threshold, joined
     back for customer attribution. Quantities aggregate as exact
-    decimals; o_totalprice ships as the decimal string.
+    decimals (folds.money_sum); o_totalprice ships as the decimal string.
 
-    Shape at 100 TB: the big-order candidate set is ONE map-side-
-    combined aggregation over lineitem followed by a semi-join
-    (left_semi, so candidate rows never widen the build side); the
-    detail re-aggregation reuses the same orderkey partitioning:
-    lineitem is repartitioned by l_orderkey once, and the HAVING
-    aggregate and the detail join both read that one exchange (the
-    second read is a ReusedExchange).
+    Plan: lineitem is aggregated ONCE per l_orderkey (a map-side-combined
+    aggregation, the one lineitem scan and shuffle) and the HAVING test
+    keeps the big orders' partial sums; orders ⋈ big ⋈ customer follows,
+    and sum_qty sums those partials. This is eager aggregation below the
+    join: each partial meets every order row with its key exactly as its
+    lineitems did, so the sums are the detail join's sums without
+    assuming o_orderkey is unique, and no second lineitem join runs.
     No LIMIT — the threshold bounds the result."""
     cu = _load(spark, sf_dir, "customer")
     od = _load(spark, sf_dir, "orders")
-    li = _load(spark, sf_dir, "lineitem").repartition("l_orderkey")
-    dq = F.col("l_quantity").cast("decimal(18,4)")
+    li, qty = folds.with_unscaled(_load(spark, sf_dir, "lineitem"), _Q)
     big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(dq).alias("_sq"))
+        li.groupBy(F.col("l_orderkey").alias("o_orderkey"))
+        .agg(folds.money_sum(qty).alias("_sq"))
         .where(F.col("_sq") > Q18_QTY)
-        .select("l_orderkey")
     )
-    j = (
-        od.join(big.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey", "left_semi")
-        .join(cu, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-    )
+    j = od.join(big, "o_orderkey").join(cu, F.col("c_custkey") == F.col("o_custkey"))
     return j.groupBy(
         "c_name",
         "c_custkey",
@@ -628,7 +640,7 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("o_orderdate")).alias("orderdate_us"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("_tp"),
     ).agg(
-        F.sum(dq).cast("decimal(38,4)").cast("string").alias("sum_qty")
+        F.sum("_sq").cast("decimal(38,4)").cast("string").alias("sum_qty")
     ).select(
         "c_name", "c_custkey", "o_orderkey", "orderdate_us",
         F.col("_tp").cast("string").alias("totalprice"), "sum_qty",
@@ -665,24 +677,20 @@ def tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape at 100 TB: one pass over lineitem, partial aggregation per
     partition, one 1-row exchange."""
-    li = _load(spark, sf_dir, "lineitem")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit(Q6_LO_TS).cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit(Q6_HI_TS).cast("timestamp_ntz"))
-            # raw-double comparisons so all three predicates PUSH to the
-            # parquet scan (a decimal cast would block row-group skipping;
-            # both engines compare the same stored double to the same
-            # double literal, so the boundary is still engine-identical)
-            & F.col("l_discount").between(F.lit(0.05), F.lit(0.07))
-            & (F.col("l_quantity") < F.lit(float(Q6_QTY)))
-        )
-        .agg(
-            F.sum(dp * dd).cast("decimal(38,8)").cast("string").alias("revenue"),
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-        )
+    li = _load(spark, sf_dir, "lineitem").where(
+        (F.col("l_shipdate") >= F.lit(Q6_LO_TS).cast("timestamp_ntz"))
+        & (F.col("l_shipdate") < F.lit(Q6_HI_TS).cast("timestamp_ntz"))
+        # raw-double comparisons so all three predicates PUSH to the
+        # parquet scan (a decimal cast would block row-group skipping;
+        # both engines compare the same stored double to the same
+        # double literal, so the boundary is still engine-identical)
+        & F.col("l_discount").between(F.lit(0.05), F.lit(0.07))
+        & (F.col("l_quantity") < F.lit(float(Q6_QTY)))
+    )
+    li, rev = folds.with_unscaled(li, _P * _D)
+    return li.agg(
+        folds.money_sum(rev).cast("string").alias("revenue"),
+        F.count(F.lit(1)).cast("bigint").alias("n_items"),
     )
 
 
@@ -735,19 +743,17 @@ def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = _load(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
     na = _load(spark, sf_dir, "nation")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
-    g = (
+    j, rev = folds.with_unscaled(
         cu.join(od, cu["c_custkey"] == od["o_custkey"])
         .join(li, od["o_orderkey"] == li["l_orderkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-        .groupBy(
-            "c_custkey", "c_name",
-            F.col("c_acctbal").cast("decimal(18,4)").alias("_ab"),
-            "n_name",
-        )
-        .agg(F.sum(dp * (F.lit(1) - dd)).cast("decimal(38,8)").alias("_rev"))
+        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"]),
+        _REV,
     )
+    g = j.groupBy(
+        "c_custkey", "c_name",
+        F.col("c_acctbal").cast("decimal(18,4)").alias("_ab"),
+        "n_name",
+    ).agg(folds.money_sum(rev).alias("_rev"))
     top = g.orderBy(F.desc("_rev"), F.asc("c_custkey")).limit(Q10_K)
     w = Window.orderBy(F.desc("_rev"), F.asc("c_custkey"))
     return top.select(
@@ -802,13 +808,10 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit(Q14_HI_TS).cast("timestamp_ntz"))
     )
     pa = _load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
-    rev = dp * (F.lit(1) - dd)
-    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0))
-    agg = li.join(pa, li["l_partkey"] == pa["p_partkey"]).agg(
-        F.sum(promo).cast("decimal(38,8)").alias("_pr"),
-        F.sum(rev).cast("decimal(38,8)").alias("_tr"),
+    j, rev = folds.with_unscaled(li.join(pa, li["l_partkey"] == pa["p_partkey"]), _REV)
+    agg = j.agg(
+        folds.money_sum(rev, when="p_type LIKE 'PROMO%'").alias("_pr"),
+        folds.money_sum(rev).alias("_tr"),
     )
     return agg.select(
         F.col("_pr").cast("string").alias("promo_revenue"),
@@ -870,8 +873,6 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     nc = na.select(
         F.col("n_nationkey").alias("_nc_key"), F.col("n_name").alias("cust_nation")
     )
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
     j = (
         su.join(li, su["s_suppkey"] == li["l_suppkey"])
         .join(od, od["o_orderkey"] == li["l_orderkey"])
@@ -883,12 +884,11 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("supp_nation") == Q7_N2) & (F.col("cust_nation") == Q7_N1))
         )
     )
+    j, rev = folds.with_unscaled(j, _REV)
     return j.groupBy(
         "supp_nation", "cust_nation",
         F.year(F.col("l_shipdate")).cast("int").alias("l_year"),
-    ).agg(
-        F.sum(dp * (F.lit(1) - dd)).cast("decimal(38,8)").cast("string").alias("revenue")
-    )
+    ).agg(folds.money_sum(rev).cast("string").alias("revenue"))
 
 
 Q8_REGION = "AMERICA"
@@ -954,10 +954,6 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     nc = na.select(
         F.col("n_nationkey").alias("_nc_key"), F.col("n_regionkey").alias("_nc_reg")
     )
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
-    vol = dp * (F.lit(1) - dd)
-    nvol = F.when(F.col("supp_nation") == Q8_NATION, vol).otherwise(F.lit(0))
     j = (
         F.broadcast(pa).join(li, pa["p_partkey"] == li["l_partkey"])
         .join(od, od["o_orderkey"] == li["l_orderkey"])
@@ -967,9 +963,10 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nc), cu["c_nationkey"] == F.col("_nc_key"))
         .join(F.broadcast(re), F.col("_nc_reg") == re["r_regionkey"])
     )
+    j, rev = folds.with_unscaled(j, _REV)
     g = j.groupBy(F.year(F.col("o_orderdate")).cast("int").alias("o_year")).agg(
-        F.sum(nvol).cast("decimal(38,8)").alias("_nv"),
-        F.sum(vol).cast("decimal(38,8)").alias("_tv"),
+        folds.money_sum(rev, when=f"supp_nation = '{Q8_NATION}'").alias("_nv"),
+        folds.money_sum(rev).alias("_tv"),
     )
     return g.select(
         "o_year",
@@ -1052,11 +1049,10 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit(Q15_LO_TS).cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit(Q15_HI_TS).cast("timestamp_ntz"))
     )
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(18,4)")
+    li, rev_u = folds.with_unscaled(li, _REV)
     rev = persist_tracked(
         li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-            F.sum(dp * (F.lit(1) - dd)).cast("decimal(38,8)").alias("total_revenue")
+            folds.money_sum(rev_u).alias("total_revenue")
         )
     )
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
@@ -1121,16 +1117,21 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_partkey", "l_quantity", "l_extendedprice"
         )
     )
-    avgq = pl.groupBy("l_partkey").agg(
-        F.sum(dq).cast("decimal(38,4)").alias("sq"),
+    pq, qty = folds.with_unscaled(pl, _Q)
+    avgq = pq.groupBy("l_partkey").agg(
+        folds.money_sum(qty).alias("sq"),
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
     )
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    j = pl.join(avgq, "l_partkey").where(dq * 5 * F.col("cnt") < F.col("sq"))
+    # a per-row comparison, not a sum: it keeps the decimal cast
+    j, price = folds.with_unscaled(
+        pl.join(avgq, "l_partkey").where(dq * 5 * F.col("cnt") < F.col("sq")), _P
+    )
     return j.agg(
-        F.sum(dp).cast("decimal(38,8)").cast("string").alias("sum_extprice"),
-        F.count(F.lit(1)).cast("bigint").alias("n_items"),
-        F.round(F.sum(dp).cast("double") / F.lit(7.0), 6).alias("avg_yearly"),
+        folds.money_sum(price).alias("_s"), F.count(F.lit(1)).cast("bigint").alias("n_items")
+    ).select(
+        F.col("_s").cast("decimal(38,8)").cast("string").alias("sum_extprice"),
+        "n_items",
+        F.round(F.col("_s").cast("double") / F.lit(7.0), 6).alias("avg_yearly"),
     )
 
 
@@ -1179,25 +1180,33 @@ def tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB: the benchmark's map-side-combine yardstick — one
     pushed-filter scan, partial aggregation per partition, a 4-row
     exchange."""
-    li = _load(spark, sf_dir, "lineitem")
-    dq = F.col("l_quantity").cast("decimal(12,4)")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(6,4)")
-    dt = F.col("l_tax").cast("decimal(6,4)")
-    one = F.lit(1).cast("decimal(5,4)")
-    cnt = F.count(F.lit(1))
+    li = _load(spark, sf_dir, "lineitem").where(
+        F.col("l_shipdate") <= F.lit(Q1_CUT_TS).cast("timestamp_ntz")
+    )
+    li, qty, price, rev, charge, disc = folds.with_unscaled(
+        li, folds.money("l_quantity", 12), _P, _REV6,
+        _REV6 * (1 + folds.money("l_tax", 6)), _D6,
+    )
+    cnt = F.col("count_order")
     return (
-        li.where(F.col("l_shipdate") <= F.lit(Q1_CUT_TS).cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
+        li.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(dq).cast("decimal(38,4)").cast("string").alias("sum_qty"),
-            F.sum(dp).cast("decimal(38,4)").cast("string").alias("sum_base_price"),
-            F.sum(dp * (one - dd)).cast("decimal(38,8)").cast("string").alias("sum_disc_price"),
-            F.sum(dp * (one - dd) * (one + dt)).cast("decimal(38,12)").cast("string").alias("sum_charge"),
-            F.round(F.sum(dq).cast("double") / cnt, 6).alias("avg_qty"),
-            F.round(F.sum(dp).cast("double") / cnt, 6).alias("avg_price"),
-            F.round(F.sum(dd).cast("double") / cnt, 6).alias("avg_disc"),
-            cnt.cast("bigint").alias("count_order"),
+            folds.money_sum(qty).alias("_q"),
+            folds.money_sum(price).alias("_p"),
+            folds.money_sum(rev).cast("string").alias("sum_disc_price"),
+            folds.money_sum(charge).cast("string").alias("sum_charge"),
+            folds.money_sum(disc).alias("_d"),
+            F.count(F.lit(1)).cast("bigint").alias("count_order"),
+        )
+        .select(
+            "l_returnflag", "l_linestatus",
+            F.col("_q").cast("string").alias("sum_qty"),
+            F.col("_p").cast("string").alias("sum_base_price"),
+            "sum_disc_price", "sum_charge",
+            F.round(F.col("_q").cast("double") / cnt, 6).alias("avg_qty"),
+            F.round(F.col("_p").cast("double") / cnt, 6).alias("avg_price"),
+            F.round(F.col("_d").cast("double") / cnt, 6).alias("avg_disc"),
+            "count_order",
         )
     )
 
@@ -1282,23 +1291,19 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     su = _load(spark, sf_dir, "supplier")
     od = _load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     na = _load(spark, sf_dir, "nation")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(6,4)")
-    dq = F.col("l_quantity").cast("decimal(12,4)")
-    one = F.lit(1).cast("decimal(5,4)")
-    cost_rate = F.lit("0.6").cast("decimal(6,4)")
-    amount = dp * (one - dd) - (F.col("p_retailprice").cast("decimal(12,4)") * cost_rate) * dq
-    return (
+    cost = folds.money("p_retailprice", 12) * folds.money_const("0.6", 6)
+    amount = _REV6 - cost * folds.money("l_quantity", 12)
+    j, amount = folds.with_unscaled(
         li.join(F.broadcast(pa), li["l_partkey"] == pa["p_partkey"])
         .join(F.broadcast(su), li["l_suppkey"] == su["s_suppkey"])
         .join(od, li["l_orderkey"] == od["o_orderkey"])
-        .join(F.broadcast(na), su["s_nationkey"] == na["n_nationkey"])
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("int").alias("o_year"),
-        )
-        .agg(F.sum(amount).cast("decimal(38,12)").cast("string").alias("sum_profit"))
+        .join(F.broadcast(na), su["s_nationkey"] == na["n_nationkey"]),
+        amount,
     )
+    return j.groupBy(
+        F.col("n_name").alias("nation"),
+        F.year("o_orderdate").cast("int").alias("o_year"),
+    ).agg(folds.money_sum(amount).cast("string").alias("sum_profit"))
 
 
 Q12_YEAR_LO = "1997-01-01 00:00:00"
@@ -1427,9 +1432,6 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     full disjunction evaluated as the join residual."""
     li = _load(spark, sf_dir, "lineitem")
     pa = _load(spark, sf_dir, "part")
-    dp = F.col("l_extendedprice").cast("decimal(18,4)")
-    dd = F.col("l_discount").cast("decimal(6,4)")
-    one = F.lit(1).cast("decimal(5,4)")
     arm = None
     for b, s, ql, qh in Q19_BANDS:
         a = (
@@ -1438,12 +1440,12 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
             & li["l_quantity"].between(float(ql), float(qh))
         )
         arm = a if arm is None else (arm | a)
-    return (
-        li.join(F.broadcast(pa), (li["l_partkey"] == pa["p_partkey"]) & arm)
-        .agg(
-            F.sum(dp * (one - dd)).cast("decimal(38,8)").cast("string").alias("revenue"),
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-        )
+    j, rev = folds.with_unscaled(
+        li.join(F.broadcast(pa), (li["l_partkey"] == pa["p_partkey"]) & arm), _REV6
+    )
+    return j.agg(
+        folds.money_sum(rev).cast("string").alias("revenue"),
+        F.count(F.lit(1)).cast("bigint").alias("n_items"),
     )
 
 
@@ -1494,19 +1496,19 @@ def tpch_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_name").startswith(Q20_NAME_PREFIX)
     ).select("p_partkey")
     su = _load(spark, sf_dir, "supplier")
-    dq = F.col("l_quantity").cast("decimal(12,4)")
     in_97 = (
-        (F.col("l_shipdate") >= F.lit(Q20_YEAR_LO).cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit(Q20_YEAR_HI).cast("timestamp_ntz"))
+        f"l_shipdate >= CAST('{Q20_YEAR_LO}' AS TIMESTAMP_NTZ)"
+        f" AND l_shipdate < CAST('{Q20_YEAR_HI}' AS TIMESTAMP_NTZ)"
+    )
+    semi, dq = folds.with_unscaled(
+        li.join(F.broadcast(pa), li["l_partkey"] == pa["p_partkey"], "left_semi"),
+        folds.money("l_quantity", 12),
     )
     ps = (
-        li.join(F.broadcast(pa), li["l_partkey"] == pa["p_partkey"], "left_semi")
-        .groupBy("l_partkey", "l_suppkey")
+        semi.groupBy("l_partkey", "l_suppkey")
         .agg(
-            F.sum(dq).cast("decimal(38,4)").alias("qty_total"),
-            F.sum(F.when(in_97, dq).otherwise(F.lit(0).cast("decimal(12,4)")))
-            .cast("decimal(38,4)")
-            .alias("qty_1997"),
+            folds.money_sum(dq).alias("qty_total"),
+            folds.money_sum(dq, when=in_97).alias("qty_1997"),
         )
         .where(
             (F.lit(2) * F.col("qty_1997") > F.col("qty_total"))
@@ -1643,9 +1645,11 @@ def tpch_q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderdate") >= F.lit(Q22_ACTIVE_TS).cast("timestamp_ntz"))
         .select("o_custkey")
     )
+    # a per-row comparison, not a sum: it keeps the decimal cast
     bal = F.col("c_acctbal").cast("decimal(12,4)")
+    cu, bal_u = folds.with_unscaled(cu, folds.money("c_acctbal", 12))
     pos = cu.where(F.col("c_acctbal") > 0).agg(
-        F.sum(bal).cast("decimal(38,4)").alias("s"),
+        folds.money_sum(bal_u).alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     return (
@@ -1655,6 +1659,6 @@ def tpch_q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("cntrycode"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("numcust"),
-            F.sum(bal).cast("decimal(38,4)").cast("string").alias("totacctbal"),
+            folds.money_sum(bal_u).cast("string").alias("totacctbal"),
         )
     )

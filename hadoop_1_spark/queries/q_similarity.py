@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 from collections.abc import Callable
 from pathlib import Path
@@ -33,21 +34,40 @@ _PARK_CODE_MD5 = hashlib.md5(
 ).hexdigest()
 
 
+# $TMPDIR namespaces of earlier park layouts: no current code reads them
+_DEAD_PARKS = (
+    "hadoop_1_spark_park", "hadoop_1_spark_ivf", "hadoop_1_spark_ivfpq",
+    "hadoop_1_spark_ivfpqr", "hadoop_1_spark_pq",
+)
+
+
 def _parked(sf_dir: str, tag: str, part: str, park: Callable[[str], None]) -> str:
-    """Parked-index dir under $TMPDIR for ``sf_dir``'s embeddings, keyed
-    on embeddings.parquet's identity (realpath + size + mtime_ns),
-    _PARK_CODE_MD5 and the hyperparameter ``tag``: a new fixture,
+    """Parked-index dir under $TMPDIR for ``sf_dir``'s embeddings:
+    ``hadoop_1_spark_parks/<file>/<version>/<tag>``, where <file> hashes
+    embeddings.parquet's realpath, <version> its size and mtime_ns with
+    _PARK_CODE_MD5, and <tag> the hyperparameter tag. A new fixture,
     parameter or park code parks afresh, a same-data rerun (bench
     best-of-3, a repeated test run) reuses the trained index. Runs
-    ``park(path)`` unless ``{path}/{part}/_SUCCESS`` exists."""
+    ``park(path)`` unless ``{path}/{part}/_SUCCESS`` exists; before it
+    does, it removes the file's other versions (older fixtures or park
+    code, which no process running this code reads) and the
+    _DEAD_PARKS namespaces."""
     emb = os.path.join(sf_dir, "embeddings.parquet")
     st = os.stat(emb)
-    key = hashlib.md5(
-        f"{os.path.realpath(emb)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"{_PARK_CODE_MD5}:{tag}".encode()
-    ).hexdigest()
-    path = os.path.join(tempfile.gettempdir(), "hadoop_1_spark_park", key)
+
+    def md5(s: str) -> str:
+        return hashlib.md5(s.encode()).hexdigest()
+
+    tmp = tempfile.gettempdir()
+    family = os.path.join(tmp, "hadoop_1_spark_parks", md5(os.path.realpath(emb)))
+    version = md5(f"{st.st_size}:{st.st_mtime_ns}:{_PARK_CODE_MD5}")
+    path = os.path.join(family, version, md5(tag))
     if not os.path.exists(os.path.join(path, part, "_SUCCESS")):
+        stale = [os.path.join(tmp, d) for d in _DEAD_PARKS]
+        if os.path.isdir(family):
+            stale += [os.path.join(family, v) for v in os.listdir(family) if v != version]
+        for d in stale:
+            shutil.rmtree(d, ignore_errors=True)
         park(path)
     return path
 

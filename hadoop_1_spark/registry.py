@@ -18,7 +18,9 @@ Cross-engine determinism rules used throughout:
   / 10^scale) while Spark's is correctly rounded, so they can differ by
   1 ulp (seen at sf0.1 on a scale-8 product sum). Sums whose scaled
   magnitude can pass 2^53 stay DECIMAL and are output as STRINGS (both
-  engines print decimal(38,8) identically).
+  engines print decimal(38,8) identically). On the Spark side such sums
+  run through ``operators.folds.money_sum``, which returns the same exact
+  decimal from sums on long lanes.
 - cross-engine hashing: md5 hex strings (identical in both engines); never
   Spark's murmur3 ``hash``/``xxhash64`` in oracle-checked queries.
 - timestamps are never output raw; cast/format to string or date parts.

@@ -165,9 +165,8 @@ def test_no_fact_table_broadcast(fact_join_plans, name):
 
 
 def test_q18_scans_lineitem_once(fact_join_plans):
-    """tpch_q18_large_orders repartitions lineitem by orderkey once: the
-    HAVING aggregate and the detail join share that exchange, so the
-    executed plan scans lineitem once (the second read is a
-    ReusedExchange)."""
+    """tpch_q18_large_orders aggregates lineitem once per orderkey and
+    joins only those per-order sums back, so the executed plan scans
+    lineitem once and has no second lineitem join to feed."""
     tables = _scanned_tables(fact_join_plans["tpch_q18_large_orders"])
     assert tables.count("lineitem") == 1, tables

@@ -1219,3 +1219,34 @@ def test_park_key_covers_park_code(monkeypatch, tmp_path):
     monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "0" * 32)
     b = q_similarity._parked(SF_DIR, "tag", "part", park)
     assert b != a and parks == [a, b]
+
+
+def test_parking_afresh_evicts_stale_parks(tmp_path, monkeypatch):
+    """Parking afresh removes the parks that other park code made for the
+    same embeddings file, and the namespaces of earlier park layouts;
+    another file's parks and this code's other tags stay."""
+    import os
+    import tempfile
+
+    from hadoop_1_spark.queries import q_similarity
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def park(p):
+        os.makedirs(os.path.join(p, "part"))
+        open(os.path.join(p, "part", "_SUCCESS"), "w").close()
+
+    other_sf = tmp_path / "other_sf"
+    other_sf.mkdir()
+    (other_sf / "embeddings.parquet").write_bytes(b"x")
+    dead = tmp_path / "hadoop_1_spark_ivf" / "key"
+    dead.mkdir(parents=True)
+    monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "0" * 32)
+    old = q_similarity._parked(SF_DIR, "tag", "part", park)
+    other = q_similarity._parked(str(other_sf), "tag", "part", park)
+    monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "1" * 32)
+    new = q_similarity._parked(SF_DIR, "tag", "part", park)
+    new2 = q_similarity._parked(SF_DIR, "tag2", "part", park)
+    assert not os.path.exists(old) and not dead.parent.exists()
+    assert all(os.path.exists(p) for p in (other, new, new2))
+    assert os.path.dirname(new) == os.path.dirname(new2)
