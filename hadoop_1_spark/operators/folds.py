@@ -83,6 +83,18 @@ decimal(38,s), bit for bit, from sums on 64-bit lanes:
   so the result is NULL exactly when the old sum was: when no row had a
   non-NULL term. The decimal(37,s) cast raises above 10^(37-s) (10^25 at
   scale 12), one digit short of decimal(38,s).
+- The lanes cost a fixed 20-40 ms per execution (a larger aggregate to
+  analyze and plan) and save per row, so a query uses them only where
+  they measured faster: sums over most of lineitem (tpch q1, q9, q18,
+  q20, join_3way, join_salted_skew, agg_sums_by_flag, agg_rollup,
+  pivot_returnflag_status, unpivot_pricing_long). Sums over few rows
+  after joins and filters (tpch q3, q5, q6, q7, q8, q10, q14, q15, q17,
+  q19, q22, join_broadcast, join_bloom_prefilter, agg_cube) use
+  ``decimal_sum``, the plain sum of the same ``Money.dec`` with the same
+  result type. Measured per query in one session at sf0.1 (4 cores,
+  noop sink, 9 alternating runs): q1 1.02 -> 0.60 s, q18 0.89 -> 0.48 s,
+  join_3way 0.82 -> 0.63 s with lanes; q3 0.55 -> 0.60 s, q5 0.65 ->
+  0.81 s, q6 0.18 -> 0.20 s (0.16 -> 0.21 s at sf0.01).
 """
 
 from __future__ import annotations
@@ -430,6 +442,15 @@ def with_unscaled(df: DataFrame, *terms: Money) -> tuple:
     names = [f"_u{hashlib.md5(m.u.encode()).hexdigest()[:12]}" for m in terms]
     out = df.withColumns({n: F.expr(m.u) for n, m in zip(names, terms)})
     return (out, *(replace(m, u=quote_ident(n)) for n, m in zip(names, terms)))
+
+
+def decimal_sum(m: Money, when: str | None = None) -> Column:
+    """The same decimal(38, m.scale) as ``money_sum``, from the plain sum
+    of the decimal chain (``m.dec``): for sums whose rows are few after
+    the joins and filters, where the lanes' fixed cost per build and
+    plan exceeds their saving per row (module docstring, "Money sums")."""
+    dec = m.dec if when is None else f"CASE WHEN {when} THEN {m.dec} ELSE 0 END"
+    return F.expr(f"CAST(sum({dec}) AS DECIMAL(38,{m.scale}))")
 
 
 def money_sum(m: Money, when: str | None = None) -> Column:

@@ -257,11 +257,11 @@ GROUP BY CUBE(c_mktsegment, c_nationkey)
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-subsets aggregation via CUBE (extension, same Expand-based
     single-shuffle evaluation)."""
-    cust, bal = folds.with_unscaled(_load(spark, sf_dir, "customer"), folds.money("c_acctbal"))
+    cust = _load(spark, sf_dir, "customer")
     return cust.cube("c_mktsegment", "c_nationkey").agg(
         F.grouping_id().cast("int").alias("gid"),
         F.count("*").cast("bigint").alias("n"),
-        folds.money_sum(bal).cast("double").alias("total_bal"),
+        folds.decimal_sum(folds.money("c_acctbal")).cast("double").alias("total_bal"),
     )
 
 

@@ -20,9 +20,10 @@ from hadoop_1_spark.registry import _load, register
 N_KEYS = 10_000  # range upper bound for the synthetic sources
 _DIVS = (2, 3, 4, 5)  # source i has the multiples of _DIVS[i]
 
-# money terms (folds.money_sum): the decimal(18,4) quantity, price and
-# discount, the decimal(6,4) discount the TPC-H completion queries use, and
-# the revenue price * (1 - discount) over each discount
+# money terms (folds.money_sum, folds.decimal_sum): the decimal(18,4)
+# quantity, price and discount, the decimal(6,4) discount the TPC-H
+# completion queries use, and the revenue price * (1 - discount) over each
+# discount
 _Q = folds.money("l_quantity")
 _P = folds.money("l_extendedprice")
 _D = folds.money("l_discount")
@@ -182,13 +183,10 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     r = _load(spark, sf_dir, "region").select("r_regionkey", "r_name")
     dims = J.broadcast_hash_join(n, r, n.n_regionkey == r.r_regionkey)
-    joined, bal = folds.with_unscaled(
-        J.broadcast_hash_join(c, dims, F.col("c_nationkey") == F.col("n_nationkey")),
-        folds.money("c_acctbal"),
-    )
+    joined = J.broadcast_hash_join(c, dims, F.col("c_nationkey") == F.col("n_nationkey"))
     return joined.groupBy("r_name", "n_name").agg(
         F.count("*").cast("bigint").alias("customers"),
-        folds.money_sum(bal).cast("double").alias("total_acctbal"),
+        folds.decimal_sum(folds.money("c_acctbal")).cast("double").alias("total_acctbal"),
     )
 
 
@@ -274,12 +272,10 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     urgent = _load(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") == "1-URGENT"
     ).select(F.col("o_orderkey").alias("l_orderkey"))
-    filtered, qty = folds.with_unscaled(
-        J.bloom_prefilter_semi_join(li, urgent, "l_orderkey"), _Q
-    )
+    filtered = J.bloom_prefilter_semi_join(li, urgent, "l_orderkey")
     return filtered.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        folds.money_sum(qty).cast("double").alias("sum_qty"),
+        folds.decimal_sum(_Q).cast("double").alias("sum_qty"),
     )
 
 
@@ -488,10 +484,10 @@ def tpch_q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     date-filtered lineitem, whichever stage finishes first) AQE turns
     it into a broadcast join and reads the other side by reducer
     partition. At 100 TB both o->l sides stay shuffled. The per-order
-    revenue is summed on long lanes (folds.with_unscaled, then
-    folds.money_sum) in the partial aggregate after the join; its input
-    is the joined, date-filtered rows, a small share of lineitem, so the
-    lanes save little here. Top-10 is a TakeOrdered over the
+    revenue is the plain decimal sum (folds.decimal_sum) in the partial
+    aggregate after the join: its input is the joined, date-filtered
+    rows, a small share of lineitem, and the long lanes measured slower
+    here (0.60 vs 0.55 s at sf0.1). Top-10 is a TakeOrdered over the
     grouped relation, never a global sort; the rank window runs over the
     10 survivors."""
     from pyspark.sql.window import Window
@@ -503,16 +499,14 @@ def tpch_q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _load(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > F.lit(Q3_CUT_TS).cast("timestamp_ntz")
     )
-    j, rev = folds.with_unscaled(
-        cu.join(od, cu["c_custkey"] == od["o_custkey"])
-        .join(li, od["o_orderkey"] == li["l_orderkey"]),
-        _REV,
+    j = cu.join(od, cu["c_custkey"] == od["o_custkey"]).join(
+        li, od["o_orderkey"] == li["l_orderkey"]
     )
     g = j.groupBy(
         "l_orderkey",
         F.unix_micros(F.col("o_orderdate")).alias("orderdate_us"),
         "o_orderpriority",
-    ).agg(folds.money_sum(rev).alias("_rev"))
+    ).agg(folds.decimal_sum(_REV).alias("_rev"))
     top = g.orderBy(
         F.desc("_rev"), F.asc("orderdate_us"), F.asc("l_orderkey")
     ).limit(Q3_K)
@@ -584,8 +578,7 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(na), su["s_nationkey"] == na["n_nationkey"])
         .join(F.broadcast(re), na["n_regionkey"] == re["r_regionkey"])
     )
-    j, rev = folds.with_unscaled(j, _REV)
-    return j.groupBy("n_name").agg(folds.money_sum(rev).cast("string").alias("revenue"))
+    return j.groupBy("n_name").agg(folds.decimal_sum(_REV).cast("string").alias("revenue"))
 
 
 Q18_QTY = 300
@@ -687,9 +680,8 @@ def tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(F.lit(0.05), F.lit(0.07))
         & (F.col("l_quantity") < F.lit(float(Q6_QTY)))
     )
-    li, rev = folds.with_unscaled(li, _P * _D)
     return li.agg(
-        folds.money_sum(rev).cast("string").alias("revenue"),
+        folds.decimal_sum(_P * _D).cast("string").alias("revenue"),
         F.count(F.lit(1)).cast("bigint").alias("n_items"),
     )
 
@@ -743,17 +735,16 @@ def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = _load(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
     na = _load(spark, sf_dir, "nation")
-    j, rev = folds.with_unscaled(
+    j = (
         cu.join(od, cu["c_custkey"] == od["o_custkey"])
         .join(li, od["o_orderkey"] == li["l_orderkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"]),
-        _REV,
+        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
     )
     g = j.groupBy(
         "c_custkey", "c_name",
         F.col("c_acctbal").cast("decimal(18,4)").alias("_ab"),
         "n_name",
-    ).agg(folds.money_sum(rev).alias("_rev"))
+    ).agg(folds.decimal_sum(_REV).alias("_rev"))
     top = g.orderBy(F.desc("_rev"), F.asc("c_custkey")).limit(Q10_K)
     w = Window.orderBy(F.desc("_rev"), F.asc("c_custkey"))
     return top.select(
@@ -808,10 +799,9 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit(Q14_HI_TS).cast("timestamp_ntz"))
     )
     pa = _load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    j, rev = folds.with_unscaled(li.join(pa, li["l_partkey"] == pa["p_partkey"]), _REV)
-    agg = j.agg(
-        folds.money_sum(rev, when="p_type LIKE 'PROMO%'").alias("_pr"),
-        folds.money_sum(rev).alias("_tr"),
+    agg = li.join(pa, li["l_partkey"] == pa["p_partkey"]).agg(
+        folds.decimal_sum(_REV, when="p_type LIKE 'PROMO%'").alias("_pr"),
+        folds.decimal_sum(_REV).alias("_tr"),
     )
     return agg.select(
         F.col("_pr").cast("string").alias("promo_revenue"),
@@ -884,11 +874,10 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("supp_nation") == Q7_N2) & (F.col("cust_nation") == Q7_N1))
         )
     )
-    j, rev = folds.with_unscaled(j, _REV)
     return j.groupBy(
         "supp_nation", "cust_nation",
         F.year(F.col("l_shipdate")).cast("int").alias("l_year"),
-    ).agg(folds.money_sum(rev).cast("string").alias("revenue"))
+    ).agg(folds.decimal_sum(_REV).cast("string").alias("revenue"))
 
 
 Q8_REGION = "AMERICA"
@@ -963,10 +952,9 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nc), cu["c_nationkey"] == F.col("_nc_key"))
         .join(F.broadcast(re), F.col("_nc_reg") == re["r_regionkey"])
     )
-    j, rev = folds.with_unscaled(j, _REV)
     g = j.groupBy(F.year(F.col("o_orderdate")).cast("int").alias("o_year")).agg(
-        folds.money_sum(rev, when=f"supp_nation = '{Q8_NATION}'").alias("_nv"),
-        folds.money_sum(rev).alias("_tv"),
+        folds.decimal_sum(_REV, when=f"supp_nation = '{Q8_NATION}'").alias("_nv"),
+        folds.decimal_sum(_REV).alias("_tv"),
     )
     return g.select(
         "o_year",
@@ -1049,10 +1037,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit(Q15_LO_TS).cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit(Q15_HI_TS).cast("timestamp_ntz"))
     )
-    li, rev_u = folds.with_unscaled(li, _REV)
     rev = persist_tracked(
         li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-            folds.money_sum(rev_u).alias("total_revenue")
+            folds.decimal_sum(_REV).alias("total_revenue")
         )
     )
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
@@ -1117,17 +1104,13 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_partkey", "l_quantity", "l_extendedprice"
         )
     )
-    pq, qty = folds.with_unscaled(pl, _Q)
-    avgq = pq.groupBy("l_partkey").agg(
-        folds.money_sum(qty).alias("sq"),
+    avgq = pl.groupBy("l_partkey").agg(
+        folds.decimal_sum(_Q).alias("sq"),
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
     )
-    # a per-row comparison, not a sum: it keeps the decimal cast
-    j, price = folds.with_unscaled(
-        pl.join(avgq, "l_partkey").where(dq * 5 * F.col("cnt") < F.col("sq")), _P
-    )
+    j = pl.join(avgq, "l_partkey").where(dq * 5 * F.col("cnt") < F.col("sq"))
     return j.agg(
-        folds.money_sum(price).alias("_s"), F.count(F.lit(1)).cast("bigint").alias("n_items")
+        folds.decimal_sum(_P).alias("_s"), F.count(F.lit(1)).cast("bigint").alias("n_items")
     ).select(
         F.col("_s").cast("decimal(38,8)").cast("string").alias("sum_extprice"),
         "n_items",
@@ -1440,11 +1423,9 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
             & li["l_quantity"].between(float(ql), float(qh))
         )
         arm = a if arm is None else (arm | a)
-    j, rev = folds.with_unscaled(
-        li.join(F.broadcast(pa), (li["l_partkey"] == pa["p_partkey"]) & arm), _REV6
-    )
+    j = li.join(F.broadcast(pa), (li["l_partkey"] == pa["p_partkey"]) & arm)
     return j.agg(
-        folds.money_sum(rev).cast("string").alias("revenue"),
+        folds.decimal_sum(_REV6).cast("string").alias("revenue"),
         F.count(F.lit(1)).cast("bigint").alias("n_items"),
     )
 
@@ -1645,20 +1626,18 @@ def tpch_q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderdate") >= F.lit(Q22_ACTIVE_TS).cast("timestamp_ntz"))
         .select("o_custkey")
     )
-    # a per-row comparison, not a sum: it keeps the decimal cast
-    bal = F.col("c_acctbal").cast("decimal(12,4)")
-    cu, bal_u = folds.with_unscaled(cu, folds.money("c_acctbal", 12))
+    bal = folds.money("c_acctbal", 12)
     pos = cu.where(F.col("c_acctbal") > 0).agg(
-        folds.money_sum(bal_u).alias("s"),
+        folds.decimal_sum(bal).alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     return (
         cu.crossJoin(F.broadcast(pos))
-        .where(bal * F.col("n") > F.col("s"))
+        .where(F.expr(bal.dec) * F.col("n") > F.col("s"))
         .join(od, F.col("c_custkey") == od["o_custkey"], "left_anti")
         .groupBy(F.col("c_nationkey").alias("cntrycode"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("numcust"),
-            folds.money_sum(bal_u).cast("string").alias("totacctbal"),
+            folds.decimal_sum(bal).cast("string").alias("totacctbal"),
         )
     )

@@ -14,6 +14,7 @@ import hashlib
 import os
 import shutil
 import tempfile
+import time
 from collections.abc import Callable
 from pathlib import Path
 
@@ -34,11 +35,15 @@ _PARK_CODE_MD5 = hashlib.md5(
 ).hexdigest()
 
 
-# $TMPDIR namespaces of earlier park layouts: no current code reads them
+# $TMPDIR namespaces of earlier park layouts: this code reads none of them
 _DEAD_PARKS = (
     "hadoop_1_spark_park", "hadoop_1_spark_ivf", "hadoop_1_spark_ivfpq",
     "hadoop_1_spark_ivfpqr", "hadoop_1_spark_pq",
 )
+# A park version (or earlier-layout namespace) is evicted only once it is
+# untouched for this long: processes running other park code (another
+# checkout, an older layout) share $TMPDIR and may still read younger ones.
+_PARK_EVICT_AGE_S = 24 * 3600
 
 
 def _parked(sf_dir: str, tag: str, part: str, park: Callable[[str], None]) -> str:
@@ -49,9 +54,9 @@ def _parked(sf_dir: str, tag: str, part: str, park: Callable[[str], None]) -> st
     parameter or park code parks afresh, a same-data rerun (bench
     best-of-3, a repeated test run) reuses the trained index. Runs
     ``park(path)`` unless ``{path}/{part}/_SUCCESS`` exists; before it
-    does, it removes the file's other versions (older fixtures or park
-    code, which no process running this code reads) and the
-    _DEAD_PARKS namespaces."""
+    does, it removes the file's other versions and the _DEAD_PARKS
+    namespaces whose mtime is older than _PARK_EVICT_AGE_S. Every call
+    touches its own version dir, so a version in use stays young."""
     emb = os.path.join(sf_dir, "embeddings.parquet")
     st = os.stat(emb)
 
@@ -62,13 +67,20 @@ def _parked(sf_dir: str, tag: str, part: str, park: Callable[[str], None]) -> st
     family = os.path.join(tmp, "hadoop_1_spark_parks", md5(os.path.realpath(emb)))
     version = md5(f"{st.st_size}:{st.st_mtime_ns}:{_PARK_CODE_MD5}")
     path = os.path.join(family, version, md5(tag))
-    if not os.path.exists(os.path.join(path, part, "_SUCCESS")):
-        stale = [os.path.join(tmp, d) for d in _DEAD_PARKS]
-        if os.path.isdir(family):
-            stale += [os.path.join(family, v) for v in os.listdir(family) if v != version]
-        for d in stale:
-            shutil.rmtree(d, ignore_errors=True)
-        park(path)
+    if os.path.exists(os.path.join(path, part, "_SUCCESS")):
+        os.utime(os.path.join(family, version))
+        return path
+    stale = [os.path.join(tmp, d) for d in _DEAD_PARKS]
+    if os.path.isdir(family):
+        stale += [os.path.join(family, v) for v in os.listdir(family) if v != version]
+    cutoff = time.time() - _PARK_EVICT_AGE_S
+    for d in stale:
+        try:
+            if os.stat(d).st_mtime < cutoff:
+                shutil.rmtree(d, ignore_errors=True)
+        except FileNotFoundError:
+            pass
+    park(path)
     return path
 
 

@@ -1,7 +1,8 @@
 """Exact money sums (operators/folds.py, "Money sums"): the fast lane of
-``unscaled4`` agrees with Spark's CAST bit for bit, ``money_sum`` returns
-exactly the decimal sum it replaces on fast, overflow, mixed and NULL
-groups, and a lane that overflows raises instead of wrapping."""
+``unscaled4`` agrees with Spark's CAST bit for bit, ``money_sum`` (and
+``decimal_sum``, its plain twin) returns exactly the decimal sum it
+replaces on fast, overflow, mixed and NULL groups, and a lane that
+overflows raises instead of wrapping."""
 
 from __future__ import annotations
 
@@ -125,6 +126,11 @@ def test_money_sum_equals_decimal_sum(spark, term):
     )
     assert got.schema == want.schema
     assert sorted(got.collect()) == sorted(want.collect())
+    plain = df.groupBy("g").agg(
+        folds.decimal_sum(m).alias("s"), folds.decimal_sum(m, when=cond).alias("w")
+    )
+    assert plain.schema == want.schema
+    assert sorted(plain.collect()) == sorted(want.collect())
     empty = df.where("false")
     assert empty.agg(folds.money_sum(m)).collect()[0][0] is None
 

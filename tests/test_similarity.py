@@ -1221,10 +1221,20 @@ def test_park_key_covers_park_code(monkeypatch, tmp_path):
     assert b != a and parks == [a, b]
 
 
+def _age(path, seconds):
+    """Set ``path``'s mtime ``seconds`` into the past."""
+    import os
+    import time
+
+    t = time.time() - seconds
+    os.utime(path, (t, t))
+
+
 def test_parking_afresh_evicts_stale_parks(tmp_path, monkeypatch):
     """Parking afresh removes the parks that other park code made for the
-    same embeddings file, and the namespaces of earlier park layouts;
-    another file's parks and this code's other tags stay."""
+    same embeddings file, and the namespaces of earlier park layouts, once
+    they are older than the eviction age; another file's parks and this
+    code's other tags stay."""
     import os
     import tempfile
 
@@ -1244,9 +1254,40 @@ def test_parking_afresh_evicts_stale_parks(tmp_path, monkeypatch):
     monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "0" * 32)
     old = q_similarity._parked(SF_DIR, "tag", "part", park)
     other = q_similarity._parked(str(other_sf), "tag", "part", park)
+    stale = q_similarity._PARK_EVICT_AGE_S + 60
+    for d in (os.path.dirname(old), os.path.dirname(other), dead.parent):
+        _age(d, stale)
     monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "1" * 32)
     new = q_similarity._parked(SF_DIR, "tag", "part", park)
     new2 = q_similarity._parked(SF_DIR, "tag2", "part", park)
     assert not os.path.exists(old) and not dead.parent.exists()
     assert all(os.path.exists(p) for p in (other, new, new2))
     assert os.path.dirname(new) == os.path.dirname(new2)
+
+
+def test_parking_afresh_keeps_young_sibling_parks(tmp_path, monkeypatch):
+    """A sibling version or earlier-layout namespace younger than the
+    eviction age may belong to a running process with other park code, so
+    parking afresh leaves it; reusing a park touches its version, so an
+    old version in use is young again."""
+    import os
+    import tempfile
+
+    from hadoop_1_spark.queries import q_similarity
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def park(p):
+        os.makedirs(os.path.join(p, "part"))
+        open(os.path.join(p, "part", "_SUCCESS"), "w").close()
+
+    dead = tmp_path / "hadoop_1_spark_park" / "key"
+    dead.mkdir(parents=True)
+    monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "0" * 32)
+    fresh = q_similarity._parked(SF_DIR, "tag", "part", park)
+    used = os.path.dirname(fresh)
+    _age(used, q_similarity._PARK_EVICT_AGE_S + 60)
+    assert q_similarity._parked(SF_DIR, "tag", "part", park) == fresh
+    monkeypatch.setattr(q_similarity, "_PARK_CODE_MD5", "1" * 32)
+    q_similarity._parked(SF_DIR, "tag", "part", park)
+    assert os.path.exists(fresh) and dead.exists()
