@@ -34,6 +34,26 @@ Scale notes (100 TB design intent):
      keeps the reducer-partition read, so that work is spread over all
      cores.
 
+Local filesystem: without ``libhadoop`` (no ``NativeIO``), Hadoop's
+``RawLocalFileSystem`` runs some file operations as child processes.
+Spark's default streaming checkpoint manager renames through
+``FileContext``, whose ``rename`` looks up both paths' link status, and
+each lookup forks ``readlink``: 112 forks in one sf0.01
+``stream_tumbling_counts`` run, which took 0.75 s with them and 0.49 s
+without (4-core VM).
+``get_spark`` therefore sets ``checkpointFileManagerClass`` to
+``FileSystemBasedCheckpointFileManager``. Both managers write a temp file
+and rename it into place; on a local filesystem this one's rename is
+``File.renameTo``, i.e. rename(2), which is atomic, so a reader never
+sees a half-written offset, commit or state file. The checkpoint layout is
+unchanged: offsets, commits, sources, metadata, state deltas with their
+``.delta.crc`` checksums and Hadoop's ``.crc`` files
+(``tests/test_streaming.py`` pins the forks and the files). Still forked:
+one ``chmod`` per created file and directory, which no setting avoids
+short of dropping the ``.crc`` files. A caller-provided session
+(``__spark_entry__``'s harness) keeps Spark's default manager, which is
+correct but slower.
+
 Schema cache: inferring a parquet schema is a Spark job (footer read and
 file listing), and every query loads its tables afresh.
 ``parquet_schema`` keeps each table's inferred schema per session, keyed by
@@ -103,6 +123,12 @@ def get_spark(app_name: str = "hadoop_1_spark", cpus: int | None = None) -> Spar
         .config("spark.sql.sources.fileCompressionFactor", str(PARQUET_EXPANSION))
         .config("spark.sql.adaptive.localShuffleReader.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # module docstring, "Local filesystem"
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Driver testdata parquet carries TIMESTAMP(NANOS) (pandas/pyarrow
         # default); Spark has no nanos timestamp — read as epoch-nanos long

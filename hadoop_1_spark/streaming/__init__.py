@@ -81,8 +81,11 @@ def run_to_table(
     query (read once at stream start; restored after): every stateful
     micro-batch pays a per-partition state-store open/commit, so 32
     partitions x a few batches of tiny state dominates wall time at test
-    scale (stream_outer_join 10.2 -> 3.3 s, tumbling counts 1.6 -> 1.1 s
-    on local[32] at sf0.1). Production sizes this to state VOLUME
+    scale (4-core VM, sf0.1, session at 32 shuffle partitions, median of
+    5: stream_outer_join 4.22 s uncapped -> 2.13 s capped at 8 -> 1.85 s
+    at 4; tumbling counts 1.47 -> 0.81 -> 0.70 s). On 4 cores
+    ``get_spark`` sets 4 partitions, so the cap of 8 does not bind there.
+    Production sizes this to state VOLUME
     instead — the value is a per-query knob precisely because state
     partition count is fixed by the checkpoint at first start.
 

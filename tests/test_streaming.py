@@ -1,26 +1,11 @@
-"""Structured Streaming family vs batch-SQL oracle + semantics checks."""
+"""Structured Streaming semantics: recovery, watermarks, state stores,
+micro-batch split invariance and the checkpoint file manager. Each
+registered streaming query's rows are compared with its DuckDB oracle by
+``tests/test_planlint.py::test_plan_lint``."""
 
 from __future__ import annotations
 
-import pytest
-
-from tests.conftest import SF_DIR, assert_query_matches_oracle
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "stream_tumbling_counts",
-        "stream_sliding_avg",
-        "stream_session_windows",
-        "stream_stateful_user_stats",
-        "stream_interval_join",
-        "stream_outer_join",
-        "stream_full_outer_join",
-    ],
-)
-def test_streaming_queries_match_oracle(spark, duck, name):
-    assert_query_matches_oracle(spark, duck, name)
+from tests.conftest import SF_DIR
 
 
 def test_memory_sinks_released_between_queries(spark):
@@ -114,10 +99,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert rows[("2024-01-01 00:00:00", "a")] == 2
 
 
-def test_stream_dedup_matches_oracle(spark, duck):
-    assert_query_matches_oracle(spark, duck, "stream_dedup")
-
-
 def test_checkpoint_recovery_resumes_stream(spark, tmp_path):
     """Fault-tolerance parity (JobTracker RecoveryManager,
     mapred/JobTracker.java:1226 -> streaming checkpoints): kill a query,
@@ -160,6 +141,46 @@ def test_checkpoint_recovery_resumes_stream(spark, tmp_path):
     got = sorted(r["v"] for r in spark.read.parquet(out).collect())
     # exactly-once: every record once, none reprocessed after recovery
     assert got == [1, 2, 3, 4, 5]
+
+
+def test_checkpoints_commit_without_readlink(spark, tmp_path):
+    """Checkpoint renames go through the FileSystem API (session.py,
+    "Local filesystem"): a stream_tumbling_counts run starts no
+    ``readlink`` process (Spark's default FileContext manager starts 112
+    at sf0.01), and an explicit checkpoint still holds each state delta
+    with Spark's checksum (``N.delta.crc``) and Hadoop's (``.N.delta.crc``)."""
+    import os
+
+    from hadoop_1_spark import registry, streaming
+    from scripts.spawn_probe import process_starts
+
+    with process_starts(spark) as commands:
+        registry.QUERIES["stream_tumbling_counts"](spark, SF_DIR).collect()
+        # a launch the recording must see, so an empty recording fails
+        spark._jvm.java.lang.Runtime.getRuntime().exec("true").waitFor()
+    assert "true" in commands, commands
+    assert [c for c in commands if c.startswith("readlink")] == []
+
+    chk = str(tmp_path / "chk")
+    q = (
+        streaming.tumbling_counts(streaming.read_events_stream(spark, SF_DIR))
+        .writeStream.format("memory")
+        .queryName("chk_files_sink")
+        .outputMode("complete")
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    for sub in ("offsets", "commits", "sources/0"):
+        assert {"0", ".0.crc"} <= set(os.listdir(os.path.join(chk, sub))), sub
+    deltas = 0
+    for dp, _, fs in os.walk(os.path.join(chk, "state")):
+        for f in fs:
+            if f.endswith(".delta") and not f.startswith("."):
+                deltas += 1
+                assert {f"{f}.crc", f".{f}.crc"} <= set(fs), (dp, sorted(fs))
+    assert deltas > 0
 
 
 def test_rocksdb_state_store_provider(spark, tmp_path):
@@ -303,12 +324,6 @@ def test_foreachbatch_incremental_dedup_ingest(spark, tmp_path):
     assert got == [1, 2, 4, 6]  # dups 3, 5, 7 rejected
 
 
-def test_stream_hll_matches_batch_sketch(spark, duck):
-    """The streamed GroupState sketch must equal the batch HLL register
-    state (monoid merge property) — checked via the shared oracle."""
-    assert_query_matches_oracle(spark, duck, "stream_hll_distinct")
-
-
 def test_stream_hll_batch_split_invariance(spark, tmp_path):
     """Same rows split across two source files (two micro-batch sets)
     -> identical final sketch to the single-file run."""
@@ -340,10 +355,6 @@ def test_stream_hll_batch_split_invariance(spark, tmp_path):
     assert run(one, "*.parquet") == run(two, "*")
 
 
-def test_stream_cms_matches_batch_grid(spark, duck):
-    assert_query_matches_oracle(spark, duck, "stream_cms_counts")
-
-
 def test_stream_cms_overestimates_only(spark):
     """CMS invariant on the streamed grid: est >= true count for every
     probed (event_type, user)."""
@@ -364,12 +375,6 @@ def test_stream_cms_overestimates_only(spark):
     assert got, "no estimates returned"
     for k, est in got.items():
         assert est >= true.get(k, 0), (k, est, true.get(k, 0))
-
-
-def test_stream_value_histogram_matches_batch(spark, duck):
-    """The streamed 64-bin GroupState histogram must equal the batch
-    binning (monoid merge property) — checked via the shared oracle."""
-    assert_query_matches_oracle(spark, duck, "stream_value_histogram")
 
 
 def test_stream_value_histogram_split_invariance(spark, tmp_path):
