@@ -1,13 +1,14 @@
 """Count the child processes the Spark JVM starts while queries run.
 
 Usage: python scripts/spawn_probe.py QUERY [QUERY ...] [--sf DIR] [--runs N]
+(``--sf`` defaults to ``session.DEFAULT_SF_DIR``)
 
 Without ``libhadoop``, Hadoop's local filesystem forks a process for some
 file operations (``readlink`` for a link-status lookup, ``chmod`` for the
 permissions of each created file and directory). Each launch costs the
-driver a millisecond or two of idle wall time. A JFR recording of
-``jdk.ProcessStart`` inside the driver JVM sees every launch, with its
-command line.
+Spark JVM about 2 ms of idle wall time. A JFR recording of
+``jdk.ProcessStart`` inside that JVM sees every launch, with its command
+line.
 
 For each query: one warm-up run, then ``--runs`` runs (build plus
 ``collect()``); prints the median wall seconds and the median launches
@@ -30,12 +31,12 @@ BASE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, BASE)
 
 from hadoop_1_spark import registry  # noqa: E402
-from hadoop_1_spark.session import get_spark  # noqa: E402
+from hadoop_1_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
 
 
 @contextlib.contextmanager
 def process_starts(spark):
-    """Record process launches in the driver JVM for the ``with`` block.
+    """Record process launches in the Spark JVM for the ``with`` block.
     Yields a list that holds, once the block exits, the command line of
     every process started inside it."""
     jvm = spark._jvm
@@ -85,7 +86,7 @@ def probe(spark, name: str, sf_dir: str, runs: int) -> tuple[float, dict[str, fl
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
