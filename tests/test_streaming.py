@@ -1,11 +1,26 @@
-"""Structured Streaming semantics: recovery, watermarks, state stores,
-micro-batch split invariance and the checkpoint file manager. Each
-registered streaming query's rows are compared with its DuckDB oracle by
-``tests/test_planlint.py::test_plan_lint``."""
+"""Structured Streaming family vs batch-SQL oracle + semantics checks."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_DIR
+import pytest
+
+from tests.conftest import SF_DIR, assert_query_matches_oracle
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_tumbling_counts",
+        "stream_sliding_avg",
+        "stream_session_windows",
+        "stream_stateful_user_stats",
+        "stream_interval_join",
+        "stream_outer_join",
+        "stream_full_outer_join",
+    ],
+)
+def test_streaming_queries_match_oracle(spark, duck, name):
+    assert_query_matches_oracle(spark, duck, name)
 
 
 def test_memory_sinks_released_between_queries(spark):
@@ -97,6 +112,10 @@ def test_watermark_drops_late_data(spark, tmp_path):
     rows = {(r["w"], r["k"]): r["count"] for r in spark.table("wm_sink").collect()}
     # first window emitted once with the on-time count only (late row dropped)
     assert rows[("2024-01-01 00:00:00", "a")] == 2
+
+
+def test_stream_dedup_matches_oracle(spark, duck):
+    assert_query_matches_oracle(spark, duck, "stream_dedup")
 
 
 def test_checkpoint_recovery_resumes_stream(spark, tmp_path):
@@ -324,6 +343,12 @@ def test_foreachbatch_incremental_dedup_ingest(spark, tmp_path):
     assert got == [1, 2, 4, 6]  # dups 3, 5, 7 rejected
 
 
+def test_stream_hll_matches_batch_sketch(spark, duck):
+    """The streamed GroupState sketch must equal the batch HLL register
+    state (monoid merge property) — checked via the shared oracle."""
+    assert_query_matches_oracle(spark, duck, "stream_hll_distinct")
+
+
 def test_stream_hll_batch_split_invariance(spark, tmp_path):
     """Same rows split across two source files (two micro-batch sets)
     -> identical final sketch to the single-file run."""
@@ -355,6 +380,10 @@ def test_stream_hll_batch_split_invariance(spark, tmp_path):
     assert run(one, "*.parquet") == run(two, "*")
 
 
+def test_stream_cms_matches_batch_grid(spark, duck):
+    assert_query_matches_oracle(spark, duck, "stream_cms_counts")
+
+
 def test_stream_cms_overestimates_only(spark):
     """CMS invariant on the streamed grid: est >= true count for every
     probed (event_type, user)."""
@@ -375,6 +404,12 @@ def test_stream_cms_overestimates_only(spark):
     assert got, "no estimates returned"
     for k, est in got.items():
         assert est >= true.get(k, 0), (k, est, true.get(k, 0))
+
+
+def test_stream_value_histogram_matches_batch(spark, duck):
+    """The streamed 64-bin GroupState histogram must equal the batch
+    binning (monoid merge property) — checked via the shared oracle."""
+    assert_query_matches_oracle(spark, duck, "stream_value_histogram")
 
 
 def test_stream_value_histogram_split_invariance(spark, tmp_path):
